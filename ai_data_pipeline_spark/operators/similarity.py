@@ -7,14 +7,24 @@ strict ``>`` on the *squared* distance (`rag_chatbot/main.py:42`),
 with distance exactly at the threshold accepted.
 
 Spark-first design:
-- the corpus stays distributed; the (small) query side broadcasts —
-  the reference's whole-corpus-in-RAM constraint disappears;
+- the corpus stays distributed; the (small) query side is a LOCAL
+  relation built from Arrow (``queries_df``): its plan is a
+  ``LocalTableScan``, so collecting or broadcasting it starts no job
+  and no Python worker — a Python-RDD ``createDataFrame(list)`` would
+  cost one of each on every request;
 - exact kNN = broadcast nested-loop join + per-query top-k window;
   at 100 TB the scan is embarrassingly parallel and the window
   shuffles only (n_queries × k) candidate rows after partial
   aggregation... more precisely we pre-reduce with a per-partition
   top-k (the window after a `row_number` filter) so the shuffle
   carries candidates, not the corpus;
+- the 1-NN-with-answer request (``knn_l2_with_threshold``) is ONE
+  corpus scan plus one tiny reduce: the numpy kernel scans the corpus
+  partitions as they are and carries the answer next to each winning
+  candidate (the reference's positional ``answers[idx]``, R19), so
+  there is no second corpus scan for a join and no per-request
+  shuffle of the corpus. An index that needs spreading across cores
+  is spread ONCE, when it is built (and cached), never per query;
 - approximate path = IVF with deterministic centroids: assign each
   corpus vector to its nearest centroid once (a narrow column),
   partition by centroid, probe only ``nprobe`` cells per query.
@@ -25,16 +35,41 @@ Spark-first design:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.functions.vector import array_lit, cosine, dot, norm, squared_l2
 
 
+def local_vectors(
+    spark: SparkSession,
+    vectors: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    id_type: str = "BIGINT",
+    id_start: int = 0,
+) -> DataFrame:
+    """Small [<id_col>, <vec_col> ARRAY<DOUBLE>] local relation, ids
+    ``id_start, id_start+1, ...`` in list order.
+
+    Built from a ``pyarrow.Table`` so the plan is a ``LocalTableScan``:
+    a collect or broadcast of it runs on the driver, with no Spark job
+    and no Python worker.
+    """
+    table = pa.table(
+        {
+            id_col: pa.array(range(id_start, id_start + len(vectors)), pa.int64()),
+            vec_col: pa.array([[float(x) for x in v] for v in vectors], pa.list_(pa.float64())),
+        }
+    )
+    return spark.createDataFrame(table, f"{id_col} {id_type}, {vec_col} ARRAY<DOUBLE>")
+
+
 def queries_df(spark: SparkSession, vectors: list[list[float]], id_start: int = 0) -> DataFrame:
-    """Small query-side DataFrame [qid, qvec] from literal vectors."""
-    rows = [(i + id_start, [float(x) for x in v]) for i, v in enumerate(vectors)]
-    return spark.createDataFrame(rows, "qid BIGINT, qvec ARRAY<DOUBLE>")
+    """Small query-side local relation [qid BIGINT, qvec ARRAY<DOUBLE>]
+    from literal vectors (see ``local_vectors``)."""
+    return local_vectors(spark, vectors, "qid", "qvec", id_start=id_start)
 
 
 def knn_l2(
@@ -77,8 +112,13 @@ def knn_l2_with_threshold(
     squared distance rejects (distance == threshold is ACCEPTED,
     preserving `rag_chatbot/main.py:42`).
 
-    Output: [qid, <corpus_id>, dist, accepted, answer]; the answer is
-    the positional-lookup join of the reference (R19) folded in.
+    Output: [qid, <corpus_id>, dist, accepted, answer]. The answer
+    (``answer_col`` as a string) rides through the numpy kernel next
+    to each winning candidate — the reference's positional
+    ``answers[idx]`` lookup (R19) — so one request is a single scan of
+    the corpus partitions as they are plus one tiny reduce: no join
+    back to the corpus, no per-request corpus shuffle. Spread an index
+    once when it is built if its partitions are too few for the cores.
 
     Distances run through the numpy kernel (operators/vectorized.py —
     bit-exact with the expression path; parity-tested) because d-wide
@@ -86,19 +126,16 @@ def knn_l2_with_threshold(
     """
     from ai_data_pipeline_spark.operators.vectorized import knn_l2_np
 
-    nn = knn_l2_np(corpus, queries, k=1, corpus_id=corpus_id, corpus_vec=corpus_vec)
-    answers = corpus.select(corpus_id, F.col(answer_col).cast("string").alias("_ans"))
-    return (
-        nn.join(answers, corpus_id)
-        .select(
-            "qid",
-            corpus_id,
-            "dist",
-            (F.col("dist") <= F.lit(threshold)).alias("accepted"),
-            F.when(F.col("dist") > F.lit(threshold), F.lit(sentinel))
-            .otherwise(F.col("_ans"))
-            .alias("answer"),
-        )
+    src = corpus.select(corpus_id, corpus_vec, F.col(answer_col).cast("string").alias("_ans"))
+    nn = knn_l2_np(src, queries, k=1, corpus_id=corpus_id, corpus_vec=corpus_vec, payload="_ans")
+    return nn.select(
+        "qid",
+        corpus_id,
+        "dist",
+        (F.col("dist") <= F.lit(threshold)).alias("accepted"),
+        F.when(F.col("dist") > F.lit(threshold), F.lit(sentinel))
+        .otherwise(F.col("_ans"))
+        .alias("answer"),
     )
 
 
@@ -180,12 +217,7 @@ def ivf_search_cosine(
     (partition pruning if the corpus is written partitioned by cell).
     """
     # nearest cells per query (tiny: n_queries × n_centroids)
-    cells = None
-    rows = []
-    for ci, cv in enumerate(centroids):
-        rows.append((ci, [float(x) for x in cv]))
-    spark = corpus_with_cells.sparkSession
-    cent_df = spark.createDataFrame(rows, "cell INT, cvec ARRAY<DOUBLE>")
+    cent_df = local_vectors(corpus_with_cells.sparkSession, centroids, "cell", "cvec", "INT")
     qcells = (
         queries.crossJoin(F.broadcast(cent_df))
         .withColumn("cd", squared_l2("qvec", "cvec", dim))

@@ -159,43 +159,72 @@ def knn_l2_np(
     k: int = 1,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
+    payload: str | None = None,
 ) -> DataFrame:
     """Exact kNN by squared L2, ties by corpus id. Same shape as
-    cosine_topk_np with (dist ASC, id ASC) ordering."""
+    cosine_topk_np with (dist ASC, id ASC) ordering.
+
+    Output: [qid, <corpus_id>, dist, rk] plus, with ``payload``, that
+    corpus column carried through the kernel next to each winning
+    candidate (so a caller needs no join back to the corpus).
+
+    The query side is collected (a local relation from
+    ``similarity.queries_df`` collects without a job). The corpus
+    partitions are scanned AS THEY ARE — no per-call repartition, so a
+    cached index is read in place and no request shuffles the corpus;
+    file sources already split by bytes, and an index that needs
+    spreading is spread once when it is built.
+    """
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
     qrows = queries.select("qid", "qvec").collect()
     qids = [int(r["qid"]) for r in qrows]
     qmat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
 
-    spark = corpus.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    src = corpus.select(
-        F.col(corpus_id).cast("long").alias("_id"), F.col(corpus_vec).alias("_vec")
-    ).repartition(n)
+    cols = [F.col(corpus_id).cast("long").alias("_id"), F.col(corpus_vec).alias("_vec")]
+    if payload is not None:
+        cols.append(F.col(payload).alias("_pay"))
+    src = corpus.select(*cols)
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        best: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        # per query: [dists, ids, (payload)] of the best k so far
+        best: dict[int, list[np.ndarray]] = {}
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = _mat(pdf["_vec"])
-            ids = pdf["_id"].to_numpy()
+            carried = [pdf["_id"].to_numpy()]
+            if payload is not None:
+                carried.append(pdf["_pay"].to_numpy())
             for qi, qid in enumerate(qids):
-                dists = sqdists_ltr(mat, qmat[qi])
-                bids = ids
+                cand = [sqdists_ltr(mat, qmat[qi]), *carried]
                 if qid in best:
-                    dists = np.concatenate([best[qid][0], dists])
-                    bids = np.concatenate([best[qid][1], bids])
-                order = np.lexsort((bids, dists))[:k]
-                best[qid] = (dists[order], bids[order])
-        for qid, (dists, bids) in best.items():
-            yield pd.DataFrame({"qid": qid, "_id": bids, "dist": dists})
+                    cand = [np.concatenate([b, c]) for b, c in zip(best[qid], cand)]
+                order = np.lexsort((cand[1], cand[0]))[:k]
+                best[qid] = [c[order] for c in cand]
+        for qid, (dists, bids, *pay) in best.items():
+            out = pd.DataFrame({"qid": qid, "_id": bids, "dist": dists})
+            if pay:
+                out["_pay"] = pay[0]
+            yield out
 
-    cand = src.mapInPandas(kern, "qid long, _id long, dist double")
+    schema = StructType(
+        [
+            StructField("qid", LongType()),
+            StructField("_id", LongType()),
+            StructField("dist", DoubleType()),
+            *src.schema.fields[2:],
+        ]
+    )
+    cand = src.mapInPandas(kern, schema)
     w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("_id"))
+    out = [F.col("_id").alias(corpus_id), "dist", "rk"]
+    if payload is not None:
+        out.append(F.col("_pay").alias(payload))
     return (
         cand.withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= k)
-        .select("qid", F.col("_id").alias(corpus_id), "dist", "rk")
+        .select("qid", *out)
     )
 
 

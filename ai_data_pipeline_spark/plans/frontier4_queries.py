@@ -2370,7 +2370,11 @@ def q310_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).write.mode("overwrite").partitionBy("shard").parquet(path)
             # manifest v1 — pinned: its rows must survive the append
             # untouched (and its lineage must not re-read the store).
-            return manifest_of(spark.read.parquet(path)).localCheckpoint()
+            # The schema is given, not inferred: an empty base writes
+            # no part file to infer it from.
+            return manifest_of(
+                spark.read.schema(base.schema).parquet(path)
+            ).localCheckpoint()
 
         def build_delta():
             return (
@@ -2398,16 +2402,18 @@ def q310_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         touched = sorted(
             int(r["shard"]) for r in delta.select("shard").distinct().collect()
         )
-        refreshed = manifest_of(
-            spark.read.option("basePath", path).parquet(
-                *[f"{path}/shard={s}" for s in touched]
-            )
-        ).withColumn("updated", F.lit(1).cast("long"))
-        merged = (
-            m1.filter(~F.col("shard").isin([int(t) for t in touched]))
-            .withColumn("updated", F.lit(0).cast("long"))
-            .unionByName(refreshed)
+        merged = m1.filter(~F.col("shard").isin(touched)).withColumn(
+            "updated", F.lit(0).cast("long")
         )
+        # an empty delta touches no shard: nothing to re-read (a
+        # zero-path parquet() raises), the manifest stays v1.
+        if touched:
+            refreshed = manifest_of(
+                spark.read.option("basePath", path).parquet(
+                    *[f"{path}/shard={s}" for s in touched]
+                )
+            ).withColumn("updated", F.lit(1).cast("long"))
+            merged = merged.unionByName(refreshed)
         out = merged.orderBy("shard").collect()  # |shards| rows
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

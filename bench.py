@@ -531,10 +531,12 @@ def main() -> int:
                 "stream_canary_sec": round(stream_canary, 3),
                 "sf": sf_val,
                 "queries": slowest,
-                # total executor task-seconds across all queries: the
-                # one-number core-scaling signal (halving cores should
-                # leave task_total_sec ~flat while walls stretch only
-                # on compute-bound rows).
+                # total executor task-seconds across all queries.
+                # NOT core-invariant: task time includes scheduling,
+                # Python-worker start and contention per task, so it
+                # grows with the core count (measured 2663 task-s on
+                # 32 cores vs 806 on 8). Compare it only between runs
+                # on the same core count.
                 "task_total_sec": round(sum(task_secs.values()), 3),
                 "note": "compact tail summary; full per-query dict on the previous line",
             }

@@ -168,6 +168,86 @@ def test_knn_threshold_rejected(spark):
     assert not out.accepted and out.answer == "NOPE"
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_queries_df_is_local_relation(spark):
+    """The query side is a LocalTableScan (collect/broadcast run on
+    the driver: no job, no Python worker), with the rows and schema
+    the Python-RDD createDataFrame(list) path produced."""
+    ddl = "qid BIGINT, qvec ARRAY<DOUBLE>"
+    vecs = [[1.0, 0.5, 0.0, -2.0], [0.25, 0.0, 3.0, 1.0]]
+    for vectors, start in ((vecs, 0), (vecs, 7), ([], 0)):
+        q = similarity.queries_df(spark, vectors, id_start=start)
+        plan = _plan(q)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+        rows = [(i + start, v) for i, v in enumerate(vectors)]
+        old = spark.createDataFrame(rows, ddl)
+        assert q.schema == old.schema
+        assert q.collect() == old.collect()
+    # the IVF centroid table shares the helper, with an INT id
+    cents = similarity.local_vectors(spark, vecs, "cell", "cvec", "INT")
+    assert cents.schema == spark.createDataFrame([], "cell INT, cvec ARRAY<DOUBLE>").schema
+    assert "LocalTableScan" in _plan(cents)
+
+
+def test_knn_threshold_request_is_one_scan(spark):
+    """One request = one corpus scan + one tiny reduce: at most 2
+    jobs, no join back to the corpus and no exchange below the
+    kernel (the corpus is scanned as it is, never re-shuffled)."""
+    corpus = _emb(spark).cache()
+    corpus.count()
+    sc = spark.sparkContext
+    group = "knn_threshold_request"
+    sc.setJobGroup(group, "one kNN request")
+    try:
+        out = similarity.knn_l2_with_threshold(
+            corpus,
+            similarity.queries_df(spark, [[1.0, 0.1, 0.0, 0.0]]),
+            threshold=1.0,
+            sentinel="NOPE",
+            answer_col="label",
+        )
+        plan = _plan(out)
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        corpus.unpersist()
+    assert [(r.vec_id, r.answer) for r in rows] == [(1, "one")]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert "Join" not in plan, plan
+    kernel = plan.index("MapInPandas")
+    assert "Exchange" not in plan[kernel:], plan
+
+
+def test_knn_threshold_answer_rides_with_winner(spark):
+    """The answer is the winning row's own, NULL included (accepted
+    with a NULL answer, not the sentinel and not a neighbour's)."""
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0], "one"),
+        (2, [0.0, 1.0, 0.0, 0.0], None),
+        (3, [0.0, 0.0, 1.0, 0.0], "three"),
+    ]
+    corpus = spark.createDataFrame(rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label STRING")
+    q = similarity.queries_df(spark, [[0.0, 0.9, 0.0, 0.0], [0.0, 0.0, 1.1, 0.0]])
+    out = similarity.knn_l2_with_threshold(
+        corpus, q, threshold=1.0, sentinel="NOPE", answer_col="label"
+    ).orderBy("qid")
+    got = [(r.qid, r.vec_id, r.accepted, r.answer) for r in out.collect()]
+    assert got == [(0, 2, True, None), (1, 3, True, "three")]
+
+
+def test_knn_threshold_empty_corpus(spark):
+    corpus = _emb(spark).limit(0)
+    q = similarity.queries_df(spark, [[1.0, 0.0, 0.0, 0.0]])
+    out = similarity.knn_l2_with_threshold(
+        corpus, q, threshold=1.0, sentinel="NOPE", answer_col="label"
+    )
+    assert out.collect() == []
+
+
 def test_cosine_topk_ignores_magnitude(spark):
     q = similarity.queries_df(spark, [[1.0, 0.0, 0.0, 0.0]])
     out = similarity.cosine_topk(_emb(spark), q, k=2).collect()

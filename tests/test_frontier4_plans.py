@@ -266,3 +266,23 @@ def test_q314_emptied_partitions_dropped(spark, tmp_path):
     e = out["release_export"]
     # shards 0 (mixed) and 3 (deleted-only): 3 survivors remain.
     assert (e["n_rows"], e["n_partitions"], e["n_rewritten"]) == (3, 2, 2)
+
+
+def test_q310_empty_delta_touches_no_shard(spark, tmp_path):
+    """A release with no documents of the export language has an
+    empty delta, so the refresh's touched-shard list is empty: q310
+    must not hand parquet() zero paths (nor infer a schema from an
+    empty base store), and must still equal its oracle — 0 rows."""
+    import duckdb
+
+    from ai_data_pipeline_spark.oracle import compare
+
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    path = str(tmp_path / "documents.parquet")
+    docs.filter(F.col("lang") != f4._Q310_LANG).write.parquet(path)
+    out = f4.q310_incremental_manifest(spark, str(tmp_path))
+    assert out.collect() == []
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+    rep = compare(out, con, f4.ORACLE["q310_incremental_manifest"])
+    assert rep["match"], rep

@@ -50,6 +50,18 @@ def test_knn_l2_parity(spark, emb):
     assert _rows(expr, "qid", "vec_id", "dist", "rk") == _rows(fast, "qid", "vec_id", "dist", "rk")
 
 
+def test_knn_l2_payload_is_the_winners_row(spark, emb):
+    """The payload the kernel carries is the candidate's own corpus
+    row, and carrying it leaves the ranking bit-exact."""
+    q = similarity.queries_df(spark, Q27_QUERY_VECS)
+    plain = knn_l2_np(emb, q, k=4).orderBy("qid", "rk")
+    carried = knn_l2_np(emb, q, k=4, payload="label").orderBy("qid", "rk")
+    cols = ("qid", "vec_id", "dist", "rk")
+    assert _rows(plain, *cols) == _rows(carried, *cols)
+    labels = dict(_rows(emb, "vec_id", "label"))
+    assert all(r["label"] == labels[r["vec_id"]] for r in carried.collect())
+
+
 def test_cosine_pairs_parity(spark, emb):
     sub = emb.filter(F.col("vec_id") < 120)
     expr = (
