@@ -168,10 +168,6 @@ DRIVER_EVIDENCE = frozenset({
     "q325_zonemap_skipping",
 })
 
-# Backward-compatible alias (pre-r03 name).
-R01_DRIVER_EVIDENCE = DRIVER_EVIDENCE
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2.
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_events, load_table
+from ai_data_pipeline_spark.catalog import load_events, load_table as _t
 from ai_data_pipeline_spark.functions.text import sql_word_ngrams, word_ngrams, ws_tokens
 from ai_data_pipeline_spark.functions.buckets import (
     log2_bucket_case as _log2b,
@@ -28,10 +28,6 @@ from ai_data_pipeline_spark.functions.buckets import (
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 _SQL_TOKS_LOWER = sql_word_ngrams("lower(text)", 1)
@@ -2926,7 +2922,7 @@ _Q161_TRUNC_DIM = 32
 
 
 def q161_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_data_pipeline_spark.functions.vector import array_lit, cosine
+    from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.plans.constants import Q27_QUERY_VECS
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3186,7 +3182,6 @@ def q167_stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
     import os
     import shutil
     import tempfile
-    import uuid as _uuid
 
     from ai_data_pipeline_spark.sources.fixtures import (
         _FIXTURE_ROOT,

@@ -31,14 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_events, load_table
+from ai_data_pipeline_spark.catalog import load_events, load_table as _t
+from ai_data_pipeline_spark.sources.store import TempStore
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # Events: value is a ≤4-decimal non-negative double → exact 1e-4
@@ -2121,39 +2118,27 @@ ORACLE["q214_market_share"] = """
 # Q215 — dynamic partition overwrite semantics (the incremental-
 # reload contract of every partitioned lake table): write orders
 # Hive-partitioned by status, then OVERWRITE with a frame containing
-# only half of status-'F' (per-write
-# option("partitionOverwriteMode", "dynamic") — no session conf, so
-# the driver's vanilla session behaves identically). Dynamic mode
-# must replace ONLY the 'F' partition and leave the others byte-
-# intact — the graded row reads back per-status counts and exact key
-# checksums (static mode would wipe the other statuses; the checksum
-# catches any partial rewrite). The bounded read-back (≤3 status
-# rows) drains to the driver so the temp dir can be deleted before
-# returning (the established tmp-dir shape).
+# only half of status-'F'. Dynamic mode must replace ONLY the 'F'
+# partition and leave the others byte-intact — the graded row reads
+# back per-status counts and exact key checksums (static mode would
+# wipe the other statuses; the checksum catches any partial rewrite).
+# Store lifecycle rules: sources/store.py.
 # ---------------------------------------------------------------------------
 
 def q215_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
-    tmp = tempfile.mkdtemp(prefix="q215_")
-    path = tmp + "/orders_part"
-    try:
-        o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-        (
+    with TempStore(spark, "q215_", "o_orderstatus") as st:
+        st.write(o)
+        st.overwrite(
             o.filter(
                 (F.col("o_orderstatus") == "F") & (F.col("o_orderkey") % 2 == 0)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("o_orderstatus")
-            .parquet(path)
+            ),
+            ["F"],
         )
         back = (
-            spark.read.parquet(path)
+            st.read()
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
@@ -2163,8 +2148,6 @@ def q215_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderstatus")
             .collect()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         back, "o_orderstatus string, n long, key_sum long, cust_sum long"
     )
@@ -2393,23 +2376,16 @@ ORACLE["q216_release_funnel"] = _q216_oracle()
 # to a fresh partitioned location, and the AUDIT row reads the
 # rewrite back: per source, surviving count, exact id checksum, and
 # removed count vs the pre-image — proving the delete removed
-# exactly the listed rows and nothing else. Bounded read-back, temp
-# dir dropped before return (q215's shape).
+# exactly the listed rows and nothing else.
 # ---------------------------------------------------------------------------
 
 def q217_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     removal = docs.filter(F.col("doc_id") % 37 == 0).select("doc_id")
-    tmp = tempfile.mkdtemp(prefix="q217_")
-    path = tmp + "/docs_clean"
-    try:
-        kept = docs.join(F.broadcast(removal), "doc_id", "left_anti")
-        kept.write.mode("overwrite").partitionBy("source").parquet(path)
+    with TempStore(spark, "q217_", "source") as st:
+        st.write(docs.join(F.broadcast(removal), "doc_id", "left_anti"))
         back = (
-            spark.read.parquet(path)
+            st.read()
             .groupBy("source")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_kept"),
@@ -2433,8 +2409,6 @@ def q217_targeted_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source")
             .collect()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         rows, "source string, n_raw long, n_kept long, n_removed long, id_sum long"
     )

@@ -28,14 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_table, spread
+from ai_data_pipeline_spark.catalog import load_table as _t, spread
+from ai_data_pipeline_spark.sources.store import TempStore
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -163,17 +160,13 @@ ORACLE["q256_source_snapshot_drift"] = _q256_oracle()
 # the read scans ~nprobe/K of the data after pruning a 1/S super
 # slice of the directory tree; probed ids are a ≤ (1+2)·|queries|
 # bounded collect (a partition filter must be literal to prune at
-# planning). Post-agg collect is 15 rows before temp-dir cleanup
-# (the q215/q217/q250 audited pattern).
+# planning). Store lifecycle rules: sources/store.py.
 # ---------------------------------------------------------------------------
 
 _Q257_NPROBE = 2
 
 
 def q257_tree_partitioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import (
         cosine,
         quantize_q6,
@@ -267,15 +260,9 @@ def q257_tree_partitioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed_sups = sorted({int(r["sup"]) for r in probe_rows})
     probed_cells = sorted({int(r["seed_id"]) for r in probe_rows})
 
-    tmp = tempfile.mkdtemp(prefix="q257_")
-    path = tmp + "/vectors_tree"
-    try:
-        # repartition on cell first (cell implies sup): one file per
-        # sup=/cell= directory, not tasks × cells slivers (q250's law)
-        corpus.repartition("cell").write.mode("overwrite").partitionBy(
-            "sup", "cell"
-        ).parquet(path)
-        store = spark.read.parquet(path)
+    with TempStore(spark, "q257_", ["sup", "cell"]) as st:
+        st.write(corpus)
+        store = st.read()
         cand = (
             store.filter(
                 F.col("sup").cast("long").isin(probed_sups)
@@ -308,10 +295,8 @@ def q257_tree_partitioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sim",
             )
             .orderBy("qid", "rk")
-            .collect()  # 15 rows before temp-dir cleanup
+            .collect()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         top, "qid long, sup long, rk long, vec_id long, sim double"
     ).orderBy("qid", "rk")

@@ -26,14 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_table, spread
+from ai_data_pipeline_spark.catalog import load_table as _t, spread
+from ai_data_pipeline_spark.profile import overlap
+from ai_data_pipeline_spark.sources.store import TempStore, content_xor
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -78,22 +76,19 @@ _Q282_BANDS = 8
 _Q282_TAU = 0.6
 
 
-def _store_admission(hist_docs, batch_docs, store=None, store_fn=None):
+def _store_admission(hist_docs, batch_docs, store_fn):
     """q282's admission core, shared with q289's lifecycle row.
 
-    Given the history docs, the batch docs, and the READ-BACK
-    signature store frame [id, sig] (either directly as ``store`` or
-    as ``store_fn``, a zero-arg builder the caller wants OVERLAPPED
-    with the batch-side checkpoints — the store build/write and the
-    two batch constructions are independent job chains, guide §2.6 /
-    the q314 r13 idiom), returns (keyed, sigs_batch):
+    Given the history docs, the batch docs, and ``store_fn``, a
+    zero-arg builder of the READ-BACK signature store frame [id, sig]
+    (run OVERLAPPED with the batch-side checkpoints — the store
+    build/write and the two batch constructions are independent job
+    chains), returns (keyed, sigs_batch):
     ``keyed`` = [doc_id, lang, cluster_id, in_hist] for every batch
     doc (cluster over ALL batch docs; in_hist non-null iff verified
     ≥ τ against a store candidate), ``sigs_batch`` = the
     checkpointed batch signature frame (q289 merges the admitted
     subset into the next store generation)."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ai_data_pipeline_spark.operators import dedup
 
     # ---- three independent eager constructions, overlapped:
@@ -116,14 +111,7 @@ def _store_admission(hist_docs, batch_docs, store=None, store_fn=None):
             batch_docs, "doc_id", "text", 3, hashed=True
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_store = pool.submit(store_fn) if store_fn is not None else None
-        f_sigs = pool.submit(build_sigs_batch)
-        f_sh = pool.submit(build_sh_batch)
-        sigs_batch = f_sigs.result()
-        sh_batch = f_sh.result()
-        if f_store is not None:
-            store = f_store.result()
+    store, sigs_batch, sh_batch = overlap(store_fn, build_sigs_batch, build_sh_batch)
 
     banded_hist = dedup.minhash_banded(store, _Q282_HASHES, _Q282_BANDS).select(
         F.col("id").alias("hid"), "band", "band_digest"
@@ -204,32 +192,26 @@ def _store_admission(hist_docs, batch_docs, store=None, store_fn=None):
 
 
 def q282_incremental_neardup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators import dedup
 
     docs = spread(_t(spark, sf_dir, "documents"))
     hist_docs = docs.filter(F.col("source") != "src0")
     batch_docs = docs.filter(F.col("source") == "src0")
 
-    tmp = tempfile.mkdtemp(prefix="q282_")
-    path = tmp + "/minhash_store"
-    try:
+    with TempStore(spark, "q282_") as st:
         # ---- store build (amortized across ingests in production;
-        # written once here so the graded query is self-contained).
-        # repartition first: without it every upstream task writes a
-        # sliver (the q250 tiny-file lesson); 8 files of packed
-        # (id, sig) rows — no text in the store. Passed as store_fn
-        # so the write overlaps the batch-side checkpoints (r13).
+        # written once here so the graded query is self-contained):
+        # packed (id, sig) rows — no text in the store. Passed as
+        # store_fn so the write overlaps the batch-side checkpoints.
         def build_store():
-            sigs_hist = dedup.minhash_signatures(
-                hist_docs, "doc_id", "text", n=3, num_hashes=_Q282_HASHES
+            st.write(
+                dedup.minhash_signatures(
+                    hist_docs, "doc_id", "text", n=3, num_hashes=_Q282_HASHES
+                )
             )
-            sigs_hist.repartition(8).write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
+            return st.read()
 
-        keyed, _ = _store_admission(hist_docs, batch_docs, store_fn=build_store)
+        keyed, _ = _store_admission(hist_docs, batch_docs, build_store)
         flag = lambda c: F.sum(F.when(c, 1).otherwise(0)).cast("long")  # noqa: E731
         is_hist = F.col("in_hist").isNotNull()
         is_keeper = F.col("doc_id") == F.col("cluster_id")
@@ -242,10 +224,8 @@ def q282_incremental_neardup_store(spark: SparkSession, sf_dir: str) -> DataFram
                 flag(~is_hist & ~is_keeper).alias("n_dropped_batch"),
             )
             .orderBy("lang")
-            .collect()  # ≤ |langs| rows, before temp-dir cleanup
+            .collect()  # ≤ |langs| rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out,
         "lang string, n_batch long, n_admitted long, "
@@ -1894,15 +1874,11 @@ ORACLE["q291_video_frame_dedup"] = _q291_oracle()
 # the oracle recomputes the identical BIGINTs from `documents`;
 # bands via shiftright(j, 2) since rows-per-band = 4). Scale: the
 # merge is an append of |admitted| × 32 longs — never a history
-# recompute; both writes repartition(8) first (the q250 tiny-file
-# rule).
+# recompute.
 # ---------------------------------------------------------------------------
 
 
 def q289_store_lifecycle_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators import dedup
 
     assert _Q282_HASHES // _Q282_BANDS == 4  # shiftright(j, 2) below
@@ -1911,31 +1887,26 @@ def q289_store_lifecycle_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist_docs = docs.filter(F.col("source") != "src0")
     batch_docs = docs.filter(F.col("source") == "src0")
 
-    tmp = tempfile.mkdtemp(prefix="q289_")
-    p1, p2 = tmp + "/store_gen1", tmp + "/store_gen2"
-    try:
+    with TempStore(spark, "q289_gen1_") as gen1, TempStore(spark, "q289_gen2_") as gen2:
         # gen-1 build passed as store_fn so the write overlaps the
-        # batch-side checkpoints (r13; see _store_admission)
+        # batch-side checkpoints (see _store_admission)
         def build_store1():
-            sigs_hist = dedup.minhash_signatures(
-                hist_docs, "doc_id", "text", n=3, num_hashes=_Q282_HASHES
+            gen1.write(
+                dedup.minhash_signatures(
+                    hist_docs, "doc_id", "text", n=3, num_hashes=_Q282_HASHES
+                )
             )
-            sigs_hist.repartition(8).write.mode("overwrite").parquet(p1)
-            return spark.read.parquet(p1)
+            return gen1.read()
 
-        keyed, sigs_batch = _store_admission(
-            hist_docs, batch_docs, store_fn=build_store1
-        )
-        store1 = spark.read.parquet(p1)
+        keyed, sigs_batch = _store_admission(hist_docs, batch_docs, build_store1)
         admitted = keyed.filter(
             F.col("in_hist").isNull() & (F.col("doc_id") == F.col("cluster_id"))
         ).select(F.col("doc_id").alias("id"))
-        merged = store1.unionByName(sigs_batch.join(admitted, "id", "semi"))
-        merged.repartition(8).write.mode("overwrite").parquet(p2)
-        store2 = spark.read.parquet(p2)
+        gen2.write(gen1.read().unionByName(sigs_batch.join(admitted, "id", "semi")))
 
         out = (
-            store2.select("id", F.posexplode("sig").alias("j", "mh"))
+            gen2.read()
+            .select("id", F.posexplode("sig").alias("j", "mh"))
             .select("id", F.shiftright("j", 2).cast("long").alias("band"), "mh")
             .groupBy("band")
             .agg(
@@ -1944,10 +1915,8 @@ def q289_store_lifecycle_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.bit_xor("mh").cast("long").alias("sig_xor"),
             )
             .orderBy("band")
-            .collect()  # 8 rows, before temp-dir cleanup
+            .collect()  # 8 rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out, "band long, n_docs long, n_rows long, sig_xor long"
     ).orderBy("band")
@@ -2143,10 +2112,8 @@ ORACLE["q292_decontaminated_split"] = _q292_oracle()
 # IVF cell partitioning makes the rewrite PRUNED: only partitions
 # containing a deleted vector are rewritten, via dynamic partition
 # overwrite [q215's mechanism] with the remaining rows of affected
-# cells; a cell whose vectors are ALL deleted gets its directory
-# dropped explicitly — dynamic overwrite cannot touch a partition
-# absent from the written frame, the documented drop-partition
-# step of every table format, fixture-pinned). The graded claim is
+# cells; a cell whose vectors are ALL deleted is dropped,
+# fixture-pinned). The graded claim is
 # END-TO-END equivalence: exact cosine top-3 over the post-delete
 # read-back must be value-identical to searching the never-deleted
 # rows of the source table (the oracle never sees the store).
@@ -2164,9 +2131,6 @@ _Q293_PICK = 3
 
 
 def q293_vector_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
@@ -2179,54 +2143,28 @@ def q293_vector_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     is_del = F.pmod(u40, F.lit(_Q293_MOD)) == _Q293_PICK
 
-    tmp = tempfile.mkdtemp(prefix="q293_")
-    path = tmp + "/vectors_by_cell"
-    try:
-        corpus.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
-        store = spark.read.parquet(path)
-
-        dels = store.filter(is_del).select("vec_id", "cell")
-        # affected-cell audit: per cell, deleted vs total rows — a
+    with TempStore(spark, "q293_", "cell") as st:
+        st.write(corpus)
+        store = st.read()
+        # affected-cell audit: per cell, deleted rows — a
         # ≤ |centroids| collect, gated by construction
         per_cell = (
             store.groupBy("cell")
-            .agg(
-                F.count(F.lit(1)).alias("n_total"),
-                F.sum(is_del.cast("int")).alias("n_del"),
-            )
+            .agg(F.sum(is_del.cast("int")).alias("n_del"))
             .filter(F.col("n_del") > 0)
             .collect()
         )
         affected = sorted(int(r["cell"]) for r in per_cell)
-        emptied = sorted(
-            int(r["cell"]) for r in per_cell if r["n_del"] == r["n_total"]
-        )
         n_deleted = int(sum(r["n_del"] for r in per_cell))
-
-        # dynamic overwrite: ONLY the partitions present in the
-        # written frame are replaced — the remaining rows of each
-        # affected cell (minus fully-emptied cells, handled below).
-        # Per-write option, not session conf (vanilla-session parity).
-        # Pin the frame before overwriting the path its lineage reads
-        # (same hazard q297's apply_batch documents: without the
-        # checkpoint, the write's read tasks scan files the commit is
-        # about to replace).
-        remaining = (
-            store.filter(F.col("cell").cast("int").isin(affected) & ~is_del)
-            .select("vec_id", "embedding", "cell")
-            .localCheckpoint()
+        st.overwrite(
+            store.filter(F.col("cell").cast("int").isin(affected) & ~is_del).select(
+                "vec_id", "embedding", "cell"
+            ),
+            affected,
         )
-        remaining.repartition("cell").write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(path)
-        for c in emptied:
-            shutil.rmtree(f"{path}/cell={c}", ignore_errors=True)
 
-        store2 = spark.read.parquet(path)
         queries = similarity.queries_df(spark, Q27_QUERY_VECS)
-        cand = store2.crossJoin(F.broadcast(queries)).select(
+        cand = st.read().crossJoin(F.broadcast(queries)).select(
             "qid",
             "vec_id",
             cosine(F.col("embedding"), F.col("qvec")).alias("sim"),
@@ -2241,10 +2179,8 @@ def q293_vector_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") <= 3)
             .select("qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim")
             .orderBy("qid", "rk")
-            .collect()  # 15 rows, before temp-dir cleanup
+            .collect()  # 15 rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     out = spark.createDataFrame(top, "qid long, rk long, vec_id long, sim double")
     return (
         out.withColumn("n_deleted", F.lit(n_deleted).cast("long"))
@@ -2324,8 +2260,7 @@ ORACLE["q293_vector_store_delete"] = _q293_oracle()
 # merge, no rewrite of existing token partitions); the read-back
 # gen-2 must be content-identical to rebuilding postings over the
 # full corpus, graded as a per-token digest: distinct docs, posting
-# rows, bit_xor of md5-60(doc_id:pos) (order-independent,
-# overflow-free, md5-family — the oracle recomputes the same
+# rows, content_xor of doc_id:pos (the oracle recomputes the same
 # BIGINTs from `documents`). Scale: the merge writes |delta
 # postings| rows; existing partitions are untouched files — the
 # append-only property every log-structured index build relies on.
@@ -2333,9 +2268,6 @@ ORACLE["q293_vector_store_delete"] = _q293_oracle()
 
 
 def q294_incremental_postings_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.text import ws_tokens
 
     needed = sorted(
@@ -2353,45 +2285,24 @@ def q294_incremental_postings_merge(spark: SparkSession, sf_dir: str) -> DataFra
         )
 
     docs = spread(_t(spark, sf_dir, "documents"))
-    tmp = tempfile.mkdtemp(prefix="q294_")
-    path = tmp + "/postings_by_token"
-    try:
-        postings(docs.filter(F.col("source") != "src0")).repartition(
-            "token"
-        ).write.mode("overwrite").partitionBy("token").parquet(path)
+    with TempStore(spark, "q294_", "token") as st:
+        st.write(postings(docs.filter(F.col("source") != "src0")))
         # delta merge = APPEND of the new batch's postings
-        postings(docs.filter(F.col("source") == "src0")).repartition(
-            "token"
-        ).write.mode("append").partitionBy("token").parquet(path)
-        store = spark.read.parquet(path)
-        ph = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("pos").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        st.append(postings(docs.filter(F.col("source") == "src0")))
+        ph = F.concat(
+            F.col("doc_id").cast("string"), F.lit(":"), F.col("pos").cast("string")
+        )
         out = (
-            store.select("token", "doc_id", ph.alias("ph"))
+            st.read()
             .groupBy("token")
             .agg(
                 F.count_distinct("doc_id").cast("long").alias("n_docs"),
                 F.count(F.lit(1)).cast("long").alias("n_postings"),
-                F.bit_xor("ph").cast("long").alias("postings_xor"),
+                content_xor(ph).alias("postings_xor"),
             )
             .orderBy("token")
-            .collect()  # ≤ |probe tokens| rows, before temp-dir cleanup
+            .collect()  # ≤ |probe tokens| rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out, "token string, n_docs long, n_postings long, postings_xor long"
     ).orderBy("token")
@@ -2481,17 +2392,12 @@ def q295_cross_modality_agreement(spark: SparkSession, sf_dir: str) -> DataFrame
         return ids.withColumn(name, F.lit(1))
 
     # the three modality pair pipelines are independent and each
-    # construction runs an eager checkpoint job — overlap them from a
-    # thread pool (guide §2.6; the q314/q303 r13 idiom)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_text = pool.submit(flagged, text_pairs, "has_text")
-        f_img = pool.submit(lambda: flagged(_q284_pairs(docs), "has_image"))
-        f_vid = pool.submit(lambda: flagged(_q291_pairs(docs), "has_video"))
-        flag_text, flag_img, flag_vid = (
-            f_text.result(), f_img.result(), f_vid.result()
-        )
+    # construction runs an eager checkpoint job — overlap them
+    flag_text, flag_img, flag_vid = overlap(
+        lambda: flagged(text_pairs, "has_text"),
+        lambda: flagged(_q284_pairs(docs), "has_image"),
+        lambda: flagged(_q291_pairs(docs), "has_video"),
+    )
     combined = (
         docs.select("doc_id")
         .join(flag_text, "doc_id", "left")
@@ -2768,9 +2674,6 @@ ORACLE["q296_ranked_retrieval"] = _q296_oracle()
 def q297_streaming_tombstone_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
@@ -2783,24 +2686,10 @@ def q297_streaming_tombstone_deletes(spark: SparkSession, sf_dir: str) -> DataFr
     ).cast("long")
     is_del = F.pmod(u40, F.lit(_Q293_MOD)) == _Q293_PICK
 
-    tmp = tempfile.mkdtemp(prefix="q297_")
-    path = tmp + "/vectors_by_cell"
-    tomb_dir = tmp + "/tombstones"
-    ckpt = tmp + "/ckpt"
-    _os.makedirs(tomb_dir)
     rewritten: set[int] = set()
-    try:
-        # r14 opt (guide §2.6): the store write and the tombstone-set
-        # collect are independent job chains — overlap them; the
-        # write pins its partition count (user-specified repartition
-        # is not AQE-coalesced → parallel write tasks, still one file
-        # per cell since each cell lives in exactly one task).
-        from concurrent.futures import ThreadPoolExecutor
-
-        def build_store():
-            corpus.repartition(
-                spark.sparkContext.defaultParallelism, "cell"
-            ).write.mode("overwrite").partitionBy("cell").parquet(path)
+    with TempStore(spark, "q297_", "cell") as st:
+        tomb_dir = st.root + "/tombstones"
+        _os.makedirs(tomb_dir)
 
         # tombstone batches: the delete set dealt into 3 files by
         # vec_id mod 3 (non-negative) — one micro-batch each. This
@@ -2808,17 +2697,15 @@ def q297_streaming_tombstone_deletes(spark: SparkSession, sf_dir: str) -> DataFr
         # production the tombstone feed arrives from outside (a
         # Kafka topic, an erasure-request table) — the engine's own
         # driver-side state is only the ≤ |centroids| per-batch
-        # affected-cell list inside apply_batch.
+        # affected-cell list inside apply_batch. The store write and
+        # this collect are independent job chains — overlapped.
         def collect_dels():
             return [
                 int(r["vec_id"])
                 for r in emb.select("vec_id").filter(is_del).collect()
             ]
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fs, fd = pool.submit(build_store), pool.submit(collect_dels)
-            fs.result()
-            del_ids = fd.result()
+        _, del_ids = overlap(lambda: st.write(corpus), collect_dels)
         n_deleted = len(del_ids)
         for b in range(3):
             with open(f"{tomb_dir}/batch{b}.json", "w") as f:
@@ -2826,50 +2713,36 @@ def q297_streaming_tombstone_deletes(spark: SparkSession, sf_dir: str) -> DataFr
                     if vid % 3 == b:
                         f.write(_json.dumps({"vec_id": vid}) + "\n")
 
-        # dynamic overwrite via per-write option (vanilla-session parity)
         def apply_batch(batch_df, epoch_id):
-            store = spark.read.parquet(path)
-            hits = store.join(batch_df.select("vec_id"), "vec_id", "semi")
-            hit_cells = hits.groupBy("cell").agg(F.count(F.lit(1)).alias("n_hit"))
-            # per affected cell: total vs hit rows — BEFORE the write
-            # (remaining's lineage scans `path`; evaluating it after
-            # the overwrite would read the rewritten store)
-            per_cell = (
-                store.groupBy("cell")
-                .agg(F.count(F.lit(1)).alias("n_total"))
-                .join(hit_cells, "cell")
+            store = st.read()
+            affected = sorted(
+                int(r["cell"])
+                for r in store.join(batch_df.select("vec_id"), "vec_id", "semi")
+                .select("cell")
+                .distinct()
                 .collect()  # ≤ |centroids| rows by construction
             )
-            affected = sorted(int(r["cell"]) for r in per_cell)
-            if not affected:
-                return
-            emptied = [int(r["cell"]) for r in per_cell if r["n_hit"] == r["n_total"]]
-            remaining = (
-                store.filter(F.col("cell").cast("int").isin(affected))
-                .join(batch_df.select("vec_id"), "vec_id", "anti")
-                .localCheckpoint()  # pin content before the path is overwritten
+            st.overwrite(
+                store.filter(F.col("cell").cast("int").isin(affected)).join(
+                    batch_df.select("vec_id"), "vec_id", "anti"
+                ),
+                affected,
             )
-            remaining.repartition("cell").write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("cell").parquet(path)
             rewritten.update(affected)
-            for c in emptied:
-                shutil.rmtree(f"{path}/cell={c}", ignore_errors=True)
 
         q = (
             spark.readStream.schema("vec_id long")
             .option("maxFilesPerTrigger", 1)
             .json(tomb_dir)
             .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", st.root + "/ckpt")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
 
-        store2 = spark.read.parquet(path)
         queries = similarity.queries_df(spark, Q27_QUERY_VECS)
-        cand = store2.crossJoin(F.broadcast(queries)).select(
+        cand = st.read().crossJoin(F.broadcast(queries)).select(
             "qid",
             "vec_id",
             cosine(F.col("embedding"), F.col("qvec")).alias("sim"),
@@ -2884,10 +2757,8 @@ def q297_streaming_tombstone_deletes(spark: SparkSession, sf_dir: str) -> DataFr
             .filter(F.col("rk") <= 3)
             .select("qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim")
             .orderBy("qid", "rk")
-            .collect()  # 15 rows, before temp-dir cleanup
+            .collect()  # 15 rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     out = spark.createDataFrame(top, "qid long, rk long, vec_id long, sim double")
     return (
         out.withColumn("n_deleted", F.lit(n_deleted).cast("long"))
@@ -2955,9 +2826,6 @@ def q298_multimodal_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()  # three pair stages + the keeper join consume it
     # the three modality pair constructions are independent and the
     # dHash/frame ones run eager checkpoint jobs — overlap them
-    # (guide §2.6; the q314/q303 r13 idiom)
-    from concurrent.futures import ThreadPoolExecutor
-
     def build_text():
         return dedup.ngram_jaccard_pairs(
             surv,
@@ -2968,15 +2836,10 @@ def q298_multimodal_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_shingle_freq=_Q263_MAXF,
         ).select("id_a", "id_b")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_text = pool.submit(build_text)
-        f_img = pool.submit(_q284_pairs, surv)
-        f_vid = pool.submit(_q291_pairs, surv)
-        edges = (
-            f_text.result().unionByName(f_img.result())
-            .unionByName(f_vid.result())
-            .distinct()
-        )
+    text, img, vid = overlap(
+        build_text, lambda: _q284_pairs(surv), lambda: _q291_pairs(surv)
+    )
+    edges = text.unionByName(img).unionByName(vid).distinct()
     clusters = dedup.dedup_clusters_star(edges)
     keyed = (
         docs.select("doc_id", "source")
@@ -3179,9 +3042,6 @@ _Q299_PICK = 0
 
 
 def q299_vector_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
@@ -3194,19 +3054,10 @@ def q299_vector_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     is_new = F.pmod(u40, F.lit(_Q299_MOD)) == _Q299_PICK
 
-    tmp = tempfile.mkdtemp(prefix="q299_")
-    path = tmp + "/vectors_by_cell"
-    try:
-        base = corpus.filter(~is_new)
-        batch = corpus.filter(is_new)
-        base.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
+    with TempStore(spark, "q299_", "cell") as st:
+        st.write(corpus.filter(~is_new))
         # the admission: append-only — existing cell files untouched
-        batch.repartition("cell").write.mode("append").partitionBy(
-            "cell"
-        ).parquet(path)
-        store = spark.read.parquet(path)
+        st.append(corpus.filter(is_new))
 
         audit = (
             corpus.agg(
@@ -3218,7 +3069,7 @@ def q299_vector_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .collect()[0]
         )
         queries = similarity.queries_df(spark, Q27_QUERY_VECS)
-        cand = store.crossJoin(F.broadcast(queries)).select(
+        cand = st.read().crossJoin(F.broadcast(queries)).select(
             "qid",
             "vec_id",
             cosine(F.col("embedding"), F.col("qvec")).alias("sim"),
@@ -3233,10 +3084,8 @@ def q299_vector_store_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") <= 3)
             .select("qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim")
             .orderBy("qid", "rk")
-            .collect()  # 15 rows, before temp-dir cleanup
+            .collect()  # 15 rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     out = spark.createDataFrame(top, "qid long, rk long, vec_id long, sim double")
     return (
         out.withColumn("n_base", F.lit(int(audit["n_base"])).cast("long"))

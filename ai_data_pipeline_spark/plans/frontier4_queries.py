@@ -28,14 +28,12 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_table, spread
+from ai_data_pipeline_spark.catalog import load_table as _t, spread
+from ai_data_pipeline_spark.profile import overlap
+from ai_data_pipeline_spark.sources.store import TempStore, content_xor, write_partitioned
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -71,9 +69,6 @@ _Q300_GENS = 3
 
 
 def q300_vector_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
@@ -88,22 +83,18 @@ def q300_vector_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(u40, F.lit(_Q300_GENS)).alias("gen"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q300_")
-    raw_path = tmp + "/store_appended"
-    compact_path = tmp + "/store_compacted"
-    try:
+    with TempStore(spark, "q300_raw_", "cell") as raw, TempStore(
+        spark, "q300_compact_", "cell"
+    ) as compact:
         # --- the fragmented store: one append per generation.
-        for g in range(_Q300_GENS):
-            mode = "overwrite" if g == 0 else "append"
-            (
-                corpus.filter(F.col("gen") == g)
-                .select("vec_id", "embedding", "cell")
-                .repartition("cell")
-                .write.mode(mode)
-                .partitionBy("cell")
-                .parquet(raw_path)
-            )
-        store = spark.read.parquet(raw_path)
+        gens = [
+            corpus.filter(F.col("gen") == g).select("vec_id", "embedding", "cell")
+            for g in range(_Q300_GENS)
+        ]
+        raw.write(gens[0])
+        for gen in gens[1:]:
+            raw.append(gen)
+        store = raw.read()
         # input_file_name is non-deterministic to the analyzer —
         # project it into a column BEFORE aggregating over it.
         files_before = (
@@ -114,14 +105,8 @@ def q300_vector_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         # --- compaction: new snapshot dir, one file per cell,
         # sorted by vec_id so footer stats are tight (the
         # compact_sorted discipline applied to a partitioned store).
-        (
-            store.repartition("cell")
-            .sortWithinPartitions("cell", "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(compact_path)
-        )
-        store2 = spark.read.parquet(compact_path)
+        compact.write(store, sort=["vec_id"])
+        store2 = compact.read()
         after = store2.select(
             F.input_file_name().alias("f"), "cell"
         ).agg(
@@ -148,12 +133,10 @@ def q300_vector_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") <= 3)
             .select("qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim")
             .orderBy("qid", "rk")
-            .collect()  # 15 rows, before temp-dir cleanup
+            .collect()  # 15 rows
         )
         nfb = int(files_before.collect()[0]["n"])  # 1 row
         arow = after.collect()[0]  # 1 row
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     out = spark.createDataFrame(top, "qid long, rk long, vec_id long, sim double")
     return (
         out.withColumn("n_files_before", F.lit(nfb).cast("long"))
@@ -274,7 +257,6 @@ from ai_data_pipeline_spark.plans.frontier3_queries import (  # noqa: E402
     _Q290_ANDS,
     _Q290_PHRASES,
     _Q296_QUERIES,
-    _Q296_TOPK,
 )
 
 
@@ -304,12 +286,17 @@ _OUT_COLS = [
 
 
 def q301_build_postings_store(docs: DataFrame, path: str) -> None:
-    """Full postings build: posexplode every document, bucket by
-    md5-40(token) mod 16, one file per bucket per job (the
-    repartition-on-the-partition-column rule)."""
+    """q301's store layout written at ``path`` (the query writes the
+    same frame through its TempStore)."""
+    write_partitioned(_q301_postings(docs), path, ["tb"])
+
+
+def _q301_postings(docs: DataFrame) -> DataFrame:
+    """Full postings: posexplode every document, bucket by
+    md5-40(token) mod 16."""
     from ai_data_pipeline_spark.functions.text import ws_tokens
 
-    postings = docs.select(
+    return docs.select(
         "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "token")
     ).withColumn(
         "tb",
@@ -317,12 +304,6 @@ def q301_build_postings_store(docs: DataFrame, path: str) -> None:
             F.conv(F.substring(F.md5(F.col("token")), 1, 10), 16, 10).cast("long"),
             F.lit(_Q301_BUCKETS),
         ),
-    )
-    (
-        postings.repartition("tb")
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(path)
     )
 
 
@@ -469,15 +450,10 @@ def q301_serve(spark: SparkSession, store: DataFrame, n_corpus_docs) -> DataFram
 
 
 def q301_full_postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     docs = spread(_t(spark, sf_dir, "documents"))
-    tmp = tempfile.mkdtemp(prefix="q301_")
-    path = tmp + "/postings_by_bucket"
-    try:
-        q301_build_postings_store(docs, path)
-        store = spark.read.parquet(path)
+    with TempStore(spark, "q301_", "tb") as st:
+        st.write(_q301_postings(docs))
+        store = st.read()
         audit = store.agg(
             F.count(F.lit(1)).cast("long").alias("n_postings"),
             F.count_distinct("tb").cast("long").alias("n_buckets"),
@@ -486,8 +462,6 @@ def q301_full_postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         served = q301_serve(spark, store, n_docs)
         rows = served.select(*_OUT_COLS).orderBy("query_id").collect()  # 8 rows
         arow = audit.collect()[0]  # 1 row
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     out = spark.createDataFrame(
         rows,
         "query_id string, kind string, query string, n_docs long, "
@@ -999,11 +973,7 @@ def q303_dedup_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truth and the three mechanism frames are INDEPENDENT pipelines
     # whose construction runs eager localCheckpoint jobs (truth here;
     # the dHash fingerprint / frame-hash frames inside
-    # _q284_pairs/_q291_pairs) — build them from a small thread pool
-    # so the checkpoint jobs overlap instead of serializing (guide
-    # §2.6; the q314 r13 idiom).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # _q284_pairs/_q291_pairs) — overlap them instead of serializing.
     def build_truth():
         return (
             dedup.ngram_jaccard_pairs(
@@ -1021,17 +991,13 @@ def q303_dedup_precision_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             min_jaccard=_Q303_TAU,
         ).select("id_a", "id_b")
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_truth = pool.submit(build_truth)
-        f_mh = pool.submit(build_minhash)
-        f_img = pool.submit(_q284_pairs, docs)
-        f_vid = pool.submit(_q291_pairs, docs)
-        truth = f_truth.result()
-        mechanisms = [
-            ("minhash", f_mh.result()),
-            ("image_dhash", f_img.result()),
-            ("video_frames", f_vid.result()),
-        ]
+    truth, mh, img, vid = overlap(
+        build_truth,
+        build_minhash,
+        lambda: _q284_pairs(docs),
+        lambda: _q291_pairs(docs),
+    )
+    mechanisms = [("minhash", mh), ("image_dhash", img), ("video_frames", vid)]
     frames = []
     for name, pairs in mechanisms:
         j = truth.join(pairs.withColumn("f", F.lit(1)), ["id_a", "id_b"], "full_outer")
@@ -1695,9 +1661,6 @@ _Q306_GENS = 3
 
 
 def q306_postings_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.text import ws_tokens
 
     docs = spread(_t(spark, sf_dir, "documents"))
@@ -1718,72 +1681,47 @@ def q306_postings_store_compaction(spark: SparkSession, sf_dir: str) -> DataFram
         F.pmod(u40, F.lit(_Q306_GENS)).alias("gen"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q306_")
-    raw_path = tmp + "/postings_appended"
-    compact_path = tmp + "/postings_compacted"
-    try:
-        for g in range(_Q306_GENS):
-            mode = "overwrite" if g == 0 else "append"
-            (
-                postings.filter(F.col("gen") == g)
-                .select("doc_id", "pos", "token", "tb")
-                .repartition("tb")
-                .write.mode(mode)
-                .partitionBy("tb")
-                .parquet(raw_path)
-            )
-        store = spark.read.parquet(raw_path)
+    with TempStore(spark, "q306_raw_", "tb") as raw, TempStore(
+        spark, "q306_compact_", "tb"
+    ) as compact:
+        gens = [
+            postings.filter(F.col("gen") == g).select("doc_id", "pos", "token", "tb")
+            for g in range(_Q306_GENS)
+        ]
+        raw.write(gens[0])
+        for gen in gens[1:]:
+            raw.append(gen)
+        store = raw.read()
         files_before = (
             store.select(F.input_file_name().alias("f"))
             .agg(F.count_distinct("f").cast("long").alias("n"))
         )
-        (
-            store.repartition("tb")
-            .sortWithinPartitions("tb", "token", "doc_id", "pos")
-            .write.mode("overwrite")
-            .partitionBy("tb")
-            .parquet(compact_path)
-        )
-        store2 = spark.read.parquet(compact_path)
+        compact.write(store, sort=["token", "doc_id", "pos"])
+        store2 = compact.read()
         files_after = (
             store2.select(F.input_file_name().alias("f"))
             .agg(F.count_distinct("f").cast("long").alias("n"))
         )
         # bucket-pruned digest read over the probe tokens.
-        ph = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("pos").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        ph = F.concat(
+            F.col("doc_id").cast("string"), F.lit(":"), F.col("pos").cast("string")
+        )
         digests = (
             store2.filter(
                 F.col("tb").isin([int(b) for b in _Q301_SCAN_BUCKETS])
                 & F.col("token").isin(list(_Q301_TOKENS))
             )
-            .select("token", "doc_id", ph.alias("ph"))
             .groupBy("token")
             .agg(
                 F.count_distinct("doc_id").cast("long").alias("n_docs"),
                 F.count(F.lit(1)).cast("long").alias("n_postings"),
-                F.bit_xor("ph").cast("long").alias("postings_xor"),
+                content_xor(ph).alias("postings_xor"),
             )
             .orderBy("token")
-            .collect()  # ≤ |probe tokens| rows, before temp-dir cleanup
+            .collect()  # ≤ |probe tokens| rows
         )
         nfb = int(files_before.collect()[0]["n"])  # 1 row
         nfa = int(files_after.collect()[0]["n"])  # 1 row
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     out = spark.createDataFrame(
         digests, "token string, n_docs long, n_postings long, postings_xor long"
     )
@@ -1866,9 +1804,6 @@ _Q307_LANG = "en"
 
 
 def q307_release_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators.curation import distributed_prefix_sum
 
     docs = _t(spark, sf_dir, "documents")
@@ -1904,25 +1839,13 @@ def q307_release_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("shard", shard_expr)
         .select("doc_id", "text", "source", "shard")
     )
-    tmp = tempfile.mkdtemp(prefix="q307_")
-    path = tmp + "/release_sharded"
-    try:
-        (
-            sharded.repartition("shard")
-            .sortWithinPartitions("shard", "doc_id")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(path)
-        )
-        back = spark.read.parquet(path)
-        dg = F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
+    with TempStore(spark, "q307_", "shard") as st:
+        st.write(sharded, sort=["doc_id"])
         manifest = (
-            back.select(
+            st.read()
+            .select(
                 F.col("shard").cast("long").alias("shard"),
                 "doc_id",
-                dg.alias("dg"),
                 F.input_file_name().alias("f"),
             )
             .groupBy("shard")
@@ -1930,14 +1853,12 @@ def q307_release_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.min("doc_id").cast("long").alias("min_doc_id"),
                 F.max("doc_id").cast("long").alias("max_doc_id"),
-                F.bit_xor("dg").cast("long").alias("content_xor"),
+                content_xor(F.col("doc_id").cast("string")).alias("content_xor"),
                 F.count_distinct("f").cast("long").alias("n_files"),
             )
             .orderBy("shard")
-            .collect()  # |shards| rows, before temp-dir cleanup
+            .collect()  # |shards| rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         manifest,
         "shard long, n_rows long, min_doc_id long, max_doc_id long, "
@@ -1982,10 +1903,9 @@ ORACLE["q307_release_export_manifest"] = f"""
 # The planner reads files-per-cell from the store itself
 # (input_file_name — never a driver directory listing), flags cells
 # with ≥ 2 files, and rewrites ONLY flagged cells via dynamic
-# partition overwrite (the frame localCheckpointed first — the
-# overwrite-lineage rule; the ≤ |cells| flagged list is a
-# count-gated collect). Graded per cell: rows, files before/after,
-# the compacted flag, and the bit_xor content digest (invariance —
+# partition overwrite (the ≤ |cells| flagged list is a count-gated
+# collect). Graded per cell: rows, files before/after,
+# the compacted flag, and the content digest (invariance —
 # compaction must not change a byte of content, and untouched cells
 # must keep their file count). Scale: the rewrite shuffles only the
 # flagged cells' rows; the planner is a metadata-cardinality agg.
@@ -1998,9 +1918,6 @@ _Q308_D2_MAXCELL = 1
 
 
 def q308_selective_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
     from ai_data_pipeline_spark.plans.constants import Q28_CENTROIDS
 
@@ -2015,27 +1932,14 @@ def q308_selective_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     d1 = (F.col("gen") == 1) & (F.col("cell") <= _Q308_D1_MAXCELL)
     d2 = (F.col("gen") == 2) & (F.col("cell") <= _Q308_D2_MAXCELL)
 
-    tmp = tempfile.mkdtemp(prefix="q308_")
-    path = tmp + "/store"
-    try:
-        for mode, cond in (
-            ("overwrite", ~d1 & ~d2),
-            ("append", d1),
-            ("append", d2),
-        ):
-            (
-                corpus.filter(cond)
-                .select("vec_id", "embedding", "cell")
-                .repartition("cell")
-                .write.mode(mode)
-                .partitionBy("cell")
-                .parquet(path)
-            )
-        store = spark.read.parquet(path)
-        # localCheckpoint: the planner frame is re-read AFTER the
-        # selective overwrite deletes the very files it counted —
-        # pin the ≤ |cells| rows now (same lineage-over-overwritten-
-        # path rule as the rewrite frame below).
+    with TempStore(spark, "q308_", "cell") as st:
+        cols = ["vec_id", "embedding", "cell"]
+        st.write(corpus.filter(~d1 & ~d2).select(*cols))
+        st.append(corpus.filter(d1).select(*cols))
+        st.append(corpus.filter(d2).select(*cols))
+        store = st.read()
+        # pinned: the planner frame is re-read AFTER the selective
+        # overwrite deletes the very files it counted
         before = (
             store.select("cell", F.input_file_name().alias("f"))
             .groupBy("cell")
@@ -2048,34 +1952,24 @@ def q308_selective_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("files_before") >= _Q308_MINFILES
             ).collect()  # ≤ |cells| rows — count-gated by construction
         )
-        # selective OPTIMIZE: rewrite ONLY the flagged cells (frame
-        # pinned before overwriting the path its lineage reads).
-        # Per-write dynamic-overwrite option (vanilla-session parity).
-        hot = (
-            store.filter(F.col("cell").cast("int").isin(flagged))
-            .select("vec_id", "embedding", "cell")
-            .localCheckpoint()
+        # selective OPTIMIZE: rewrite ONLY the flagged cells
+        st.overwrite(
+            store.filter(F.col("cell").cast("int").isin(flagged)).select(*cols),
+            flagged,
         )
-        hot.repartition("cell").write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(path)
 
-        store2 = spark.read.parquet(path)
-        dg = F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
         audit = (
-            store2.select(
+            st.read()
+            .select(
                 F.col("cell").cast("long").alias("cell"),
                 "vec_id",
-                dg.alias("dg"),
                 F.input_file_name().alias("f"),
             )
             .groupBy("cell")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.count_distinct("f").cast("long").alias("files_after"),
-                F.bit_xor("dg").cast("long").alias("content_xor"),
+                content_xor(F.col("vec_id").cast("string")).alias("content_xor"),
             )
             .join(
                 before.select(F.col("cell").cast("long").alias("cell"), "files_before"),
@@ -2093,10 +1987,8 @@ def q308_selective_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "content_xor",
             )
             .orderBy("cell")
-            .collect()  # |cells| rows, before temp-dir cleanup
+            .collect()  # |cells| rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         audit,
         "cell long, n_rows long, files_before long, files_after long, "
@@ -2314,9 +2206,6 @@ _Q310_LANG = "en"
 
 
 def q310_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     release = docs.filter(F.col("lang") == _Q310_LANG).select("doc_id", "text")
     # fixed-width range shard: power-of-two divisor → floor exact.
@@ -2329,16 +2218,11 @@ def q310_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text", shard_of.alias("shard"), "is_delta")
     )
 
-    dg = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-
     def manifest_of(frame):
         return (
             frame.select(
                 F.col("shard").cast("long").alias("shard"),
                 "doc_id",
-                dg.alias("dg"),
                 F.input_file_name().alias("f"),
             )
             .groupBy("shard")
@@ -2346,35 +2230,24 @@ def q310_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.min("doc_id").cast("long").alias("min_doc_id"),
                 F.max("doc_id").cast("long").alias("max_doc_id"),
-                F.bit_xor("dg").cast("long").alias("content_xor"),
+                content_xor(F.col("doc_id").cast("string")).alias("content_xor"),
                 F.count_distinct("f").cast("long").alias("n_files"),
             )
         )
 
-    tmp = tempfile.mkdtemp(prefix="q310_")
-    path = tmp + "/release_by_shard"
-    try:
-        base = flagged.filter(~F.col("is_delta")).select("doc_id", "text", "shard")
-
-        # r14 opt (guide §2.4/§2.6, the q315 pattern): the delta is
-        # ONE range width (≤ _Q310_WIDTH docs) — pin it once instead
-        # of re-scanning the corpus for the append AND the touched
-        # collect; overlap that narrow checkpoint with the (base
-        # write → manifest v1) chain, which must stay sequential
-        # (v1 must not see delta rows). The base write pins its
-        # partition count (REPARTITION_BY_NUM is not AQE-coalesced →
-        # parallel write; still one file per shard).
+    with TempStore(spark, "q310_", "shard") as st:
+        # the delta is ONE range width (≤ _Q310_WIDTH docs) — pin it
+        # once instead of re-scanning the corpus for the append AND
+        # the touched collect; overlap that narrow checkpoint with the
+        # (base write → manifest v1) chain, which must stay sequential
+        # (v1 must not see delta rows).
         def build_base():
-            base.repartition(
-                spark.sparkContext.defaultParallelism, "shard"
-            ).write.mode("overwrite").partitionBy("shard").parquet(path)
+            st.write(
+                flagged.filter(~F.col("is_delta")).select("doc_id", "text", "shard")
+            )
             # manifest v1 — pinned: its rows must survive the append
             # untouched (and its lineage must not re-read the store).
-            # The schema is given, not inferred: an empty base writes
-            # no part file to infer it from.
-            return manifest_of(
-                spark.read.schema(base.schema).parquet(path)
-            ).localCheckpoint()
+            return manifest_of(st.read()).localCheckpoint()
 
         def build_delta():
             return (
@@ -2383,40 +2256,26 @@ def q310_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint()  # ≤ one range width of rows
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fm, fd = pool.submit(build_base), pool.submit(build_delta)
-            m1, delta = fm.result(), fd.result()
+        m1, delta = overlap(build_base, build_delta)
         # the daily append: existing shard files untouched.
-        delta.repartition("shard").write.mode("append").partitionBy(
-            "shard"
-        ).parquet(path)
+        st.append(delta)
         # the incremental refresh: ONLY shards the delta touched,
-        # read PARTITION-PRUNED from the store (the delta spans one
-        # range width → ≤ 2 consecutive shards; the collect is
-        # count-gated by construction). Listing only the touched
-        # shard directories (basePath keeps the partition column)
-        # skips the full |shards|-directory store listing; literal
-        # dirs also keep input_file_name single-source.
+        # listed and read by directory (the delta spans one range
+        # width → ≤ 2 consecutive shards; the collect is count-gated
+        # by construction). Literal dirs keep input_file_name
+        # single-source; an empty delta touches no shard and the
+        # manifest stays v1.
         touched = sorted(
             int(r["shard"]) for r in delta.select("shard").distinct().collect()
         )
-        merged = m1.filter(~F.col("shard").isin(touched)).withColumn(
-            "updated", F.lit(0).cast("long")
+        refreshed = manifest_of(st.read([st.part(s) for s in touched]))
+        out = (
+            m1.filter(~F.col("shard").isin(touched))
+            .withColumn("updated", F.lit(0).cast("long"))
+            .unionByName(refreshed.withColumn("updated", F.lit(1).cast("long")))
+            .orderBy("shard")
+            .collect()  # |shards| rows
         )
-        # an empty delta touches no shard: nothing to re-read (a
-        # zero-path parquet() raises), the manifest stays v1.
-        if touched:
-            refreshed = manifest_of(
-                spark.read.option("basePath", path).parquet(
-                    *[f"{path}/shard={s}" for s in touched]
-                )
-            ).withColumn("updated", F.lit(1).cast("long"))
-            merged = merged.unionByName(refreshed)
-        out = merged.orderBy("shard").collect()  # |shards| rows
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out,
         "shard long, n_rows long, min_doc_id long, max_doc_id long, "
@@ -2666,9 +2525,6 @@ _Q312_PICK = 0
 
 
 def q312_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
@@ -2683,45 +2539,32 @@ def q312_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.pmod(u40, F.lit(_Q312_MOD)) == _Q312_PICK).alias("is_new"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q312_")
-    path = tmp + "/store"
-    try:
+    with TempStore(spark, "q312_", "cell") as st:
         base = corpus.filter(~F.col("is_new")).select("vec_id", "embedding", "cell")
         batch = corpus.filter(F.col("is_new")).select("vec_id", "embedding", "cell")
-        # pinned partition count (r14, q315 write finding): parallel
-        # write tasks, still one file per cell per write job.
-        base.repartition(
-            spark.sparkContext.defaultParallelism, "cell"
-        ).write.mode("overwrite").partitionBy("cell").parquet(path)
-        # manifest v1: the snapshot's file list, read back from the
-        # store itself (≤ |cells| files — count-gated collect).
-        v1_files = sorted(
-            r["f"]
-            for r in spark.read.parquet(path)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
+
+        def file_list():
+            # the snapshot's file list, read back from the store
+            # itself (≤ |cells| files per write — count-gated collect)
+            return sorted(
+                r["f"]
+                for r in st.read()
+                .select(F.input_file_name().alias("f"))
+                .distinct()
+                .collect()
+            )
+
+        st.write(base)
+        v1_files = file_list()  # manifest v1
         # the append: COW — v1 files untouched, new files added.
-        batch.repartition("cell").write.mode("append").partitionBy(
-            "cell"
-        ).parquet(path)
-        all_files = sorted(
-            r["f"]
-            for r in spark.read.parquet(path)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
+        st.append(batch)
+        all_files = file_list()
         v2_files = all_files  # v1's list + the delta's files
         # COW verification (a real check, not an assert — survives
         # python -O and fails loudly): every v1 file must still be
         # on disk untouched after the append, and the delta must be
-        # exactly one new file per cell the batch touched (the
-        # append repartitions on "cell" before the partitioned
-        # write, so each touched cell gains ONE file — the q250
-        # rule). A rewrite-in-place or a tiny-file spray would both
-        # break this.
+        # exactly one new file per cell the batch touched. A
+        # rewrite-in-place or a tiny-file spray would both break this.
         missing = set(v1_files) - set(all_files)
         delta = set(all_files) - set(v1_files)
         n_batch_cells = batch.select("cell").distinct().count()  # ≤ |centroids|
@@ -2735,10 +2578,8 @@ def q312_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries = similarity.queries_df(spark, Q27_QUERY_VECS)
 
         def search(files, state):
-            # a reader pinned to a manifest: reads exactly those
-            # files (basePath keeps the cell partition column).
-            snap = spark.read.option("basePath", path).parquet(*files)
-            cand = snap.crossJoin(F.broadcast(queries)).select(
+            # a reader pinned to a manifest: reads exactly those files
+            cand = st.read(files).crossJoin(F.broadcast(queries)).select(
                 "qid",
                 "vec_id",
                 cosine(F.col("embedding"), F.col("qvec")).alias("sim"),
@@ -2766,10 +2607,8 @@ def q312_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             search(v1_files, 1)
             .unionByName(search(v2_files, 2))
             .orderBy("snapshot", "qid", "rk")
-            .collect()  # 30 rows, before temp-dir cleanup
+            .collect()  # 30 rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     res = spark.createDataFrame(
         out, "snapshot long, qid long, rk long, vec_id long, sim double"
     )
@@ -2912,17 +2751,10 @@ def q313_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     both = frames[0].unionByName(frames[1])
-    dg = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-    stats = (
-        both.withColumn("dg", dg)
-        .groupBy("epoch", "batch")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.min_by("doc_id", "rank").cast("long").alias("first_doc"),
-            F.bit_xor("dg").cast("long").alias("content_xor"),
-        )
+    stats = both.groupBy("epoch", "batch").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.min_by("doc_id", "rank").cast("long").alias("first_doc"),
+        content_xor(F.col("doc_id").cast("string")).alias("content_xor"),
     )
     e0 = frames[0].select("doc_id", F.col("batch").alias("b0"))
     e1 = frames[1].select("doc_id", F.col("batch").alias("b1"))
@@ -2997,9 +2829,8 @@ ORACLE["q313_epoch_shuffle"] = _q313_oracle()
 # partitioned (cell / token / doc_id-range shard), then D is erased
 # via dynamic partition overwrite of ONLY the partitions holding D
 # rows (each affected-partition list is a count-gated collect
-# bounded by that store's partition geometry; every rewrite frame
-# localCheckpointed — the overwrite-lineage rule). Graded one row
-# per artifact from the READ-BACK: rows after, bit_xor content
+# bounded by that store's partition geometry). Graded one row
+# per artifact from the READ-BACK: rows after, content
 # digest (vec ids / doc:pos postings / doc ids — each ≡ the
 # oracle's recompute-without-D, so a single surviving deleted row
 # flips the hash), partitions total vs rewritten. Scale: each
@@ -3011,9 +2842,6 @@ _Q314_MOD = 53
 
 
 def q314_cross_store_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.text import ws_tokens
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
     from ai_data_pipeline_spark.plans.constants import Q28_CENTROIDS
@@ -3025,118 +2853,72 @@ def q314_cross_store_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     is_del = lambda c: F.pmod(u40(c), F.lit(_Q314_MOD)) == 0  # noqa: E731
 
-    tmp = tempfile.mkdtemp(prefix="q314_")
-    results = []
-    try:
-
-        def erase(store_df, pcol):
-            """Planner for one artifact: per-partition row/delete
-            counts (pinned — the rewrite overwrites the counted
-            files) + the affected-partition list, split into
-            partitions with survivors (rewritten via dynamic
-            overwrite) and FULLY-EMPTIED partitions (every row
-            deleted — dynamic overwrite can't touch a partition
-            absent from the written frame, so their directories are
-            dropped explicitly, q293's documented drop-partition
-            step; without it a low-df token whose only docs are
-            deleted would survive erasure on disk)."""
-            flagged = (
-                store_df.groupBy(pcol)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.col("_del").cast("int")).alias("nd"),
-                )
-                .localCheckpoint()  # counted files get overwritten below
+    def run_artifact(build_df, pcol, id_key, keep_cols, name):
+        """One artifact's full erase pipeline: build → plan → rewrite
+        the affected partitions' survivors → digest the read-back.
+        Independent per artifact."""
+        with TempStore(spark, f"q314_{name}_", pcol) as st:
+            st.write(build_df)
+            store = st.read().withColumn("_del", is_del(F.col(keep_cols[0])))
+            # per-partition delete counts — bounded by the store's
+            # partition geometry
+            parts = (
+                store.groupBy(pcol)
+                .agg(F.sum(F.col("_del").cast("int")).alias("nd"))
+                .collect()
             )
-            hit = flagged.filter(F.col("nd") > 0).collect()
-            # bounded by the store's partition geometry
-            affected = sorted(r[pcol] for r in hit)
-            emptied = sorted(r[pcol] for r in hit if r["nd"] == r["n"])
-            return flagged, affected, emptied
-
-        def run_artifact(store_path, build_df, pcol, id_digest, keep_cols, name, aff_cast):
-            """One artifact's full erase pipeline: build → plan →
-            rewrite survivors (per-write dynamic overwrite, q215's
-            idiom) → drop emptied partitions (q293's rule) → digest
-            the read-back. Independent per artifact."""
-            # pinned partition count: REPARTITION_BY_NUM is not AQE-
-            # coalesced, so the build write runs parallel tasks (one
-            # file per partition value still — each value lives in
-            # exactly one task). r14; the q315 write finding.
-            build_df.repartition(
-                spark.sparkContext.defaultParallelism, pcol
-            ).write.mode("overwrite").partitionBy(pcol).parquet(store_path)
-            store = spark.read.parquet(store_path).withColumn(
-                "_del", is_del(F.col(keep_cols[0]))
-            )
-            flag, aff, empty = erase(store, pcol)
-            keep = (
-                store.filter(F.col(pcol).cast(aff_cast).isin(
-                    [a for a in aff]
-                ))
-                .filter(~F.col("_del"))
-                .select(*keep_cols, pcol)
-                .localCheckpoint()
-            )
-            keep.repartition(pcol).write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy(pcol).parquet(store_path)
-            for v in empty:
-                shutil.rmtree(f"{store_path}/{pcol}={v}", ignore_errors=True)
-            back = spark.read.parquet(store_path)
-            row = back.agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.bit_xor(
-                    F.conv(F.substring(F.md5(id_digest), 1, 15), 16, 10).cast("long")
-                ).cast("long").alias("content_xor"),
-            ).collect()[0]  # 1 row
-            return (name, int(row["n_rows"]), int(row["content_xor"]),
-                    flag.count(), len(aff))
-
-        # the three artifacts are INDEPENDENT pipelines over different
-        # paths — run them from a small thread pool so each one's
-        # straggler/commit tail backfills the others (guide §2.6
-        # "overlap independent jobs"; A/B-measured below). Results are
-        # ordered by the final orderBy("artifact"), so completion
-        # order is irrelevant.
-        vec = ivf_assign_np(emb, Q28_CENTROIDS).select(
-            "vec_id", "embedding", F.col("cell").cast("int").alias("cell")
-        )
-        needed = sorted(_Q301_TOKENS)
-        postings = docs.select(
-            "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "token")
-        ).filter(F.col("token").isin(needed))
-        rel = docs.select(
-            "doc_id",
-            "text",
-            F.floor(F.col("doc_id") / F.lit(64.0)).cast("int").alias("shard"),
-        )
-        jobs = [
-            lambda: run_artifact(
-                tmp + "/vectors", vec, "cell",
-                F.col("vec_id").cast("string"),
-                ["vec_id", "embedding"], "vector_store", "int",
-            ),
-            lambda: run_artifact(
-                tmp + "/postings", postings, "token",
-                F.concat(
-                    F.col("doc_id").cast("string"), F.lit(":"),
-                    F.col("pos").cast("string"),
+            affected = sorted(r[pcol] for r in parts if r["nd"] > 0)
+            st.overwrite(
+                store.filter(F.col(pcol).isin(affected) & ~F.col("_del")).select(
+                    *keep_cols, pcol
                 ),
-                ["doc_id", "pos"], "postings", "string",
-            ),
-            lambda: run_artifact(
-                tmp + "/export", rel, "shard",
-                F.col("doc_id").cast("string"),
-                ["doc_id", "text"], "release_export", "int",
-            ),
-        ]
-        from concurrent.futures import ThreadPoolExecutor
+                affected,
+            )
+            row = (
+                st.read()
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_rows"),
+                    content_xor(id_key).alias("content_xor"),
+                )
+                .collect()[0]  # 1 row
+            )
+        return (name, int(row["n_rows"]), int(row["content_xor"]),
+                len(parts), len(affected))
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            results = list(pool.map(lambda f: f(), jobs))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    # the three artifacts are INDEPENDENT pipelines over different
+    # stores — overlapped so each one's straggler/commit tail
+    # backfills the others. Results are ordered by the final
+    # orderBy("artifact"), so completion order is irrelevant.
+    vec = ivf_assign_np(emb, Q28_CENTROIDS).select(
+        "vec_id", "embedding", F.col("cell").cast("int").alias("cell")
+    )
+    needed = sorted(_Q301_TOKENS)
+    postings = docs.select(
+        "doc_id", F.posexplode(ws_tokens(F.col("text"))).alias("pos", "token")
+    ).filter(F.col("token").isin(needed))
+    rel = docs.select(
+        "doc_id",
+        "text",
+        F.floor(F.col("doc_id") / F.lit(64.0)).cast("int").alias("shard"),
+    )
+    results = overlap(
+        lambda: run_artifact(
+            vec, "cell", F.col("vec_id").cast("string"),
+            ["vec_id", "embedding"], "vector_store",
+        ),
+        lambda: run_artifact(
+            postings, "token",
+            F.concat(
+                F.col("doc_id").cast("string"), F.lit(":"),
+                F.col("pos").cast("string"),
+            ),
+            ["doc_id", "pos"], "postings",
+        ),
+        lambda: run_artifact(
+            rel, "shard", F.col("doc_id").cast("string"),
+            ["doc_id", "text"], "release_export",
+        ),
+    )
     return spark.createDataFrame(
         results,
         "artifact string, n_rows long, content_xor long, "
@@ -3259,9 +3041,6 @@ _Q315_NDELTAS = 3
 
 def q315_streaming_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     u40 = F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 10), 16, 10
@@ -3286,24 +3065,11 @@ def q315_streaming_export_manifest(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
 
-    tmp = tempfile.mkdtemp(prefix="q315_")
-    path = tmp + "/export_by_shard"
-    feed = tmp + "/delta_feed"
-    ckpt = tmp + "/ckpt"
-    _os.makedirs(feed)
-    mdirs = [tmp + f"/manifest_v{v}" for v in range(_Q315_NDELTAS + 1)]
-    mver = 0
-
-    dg = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
-
     def digest(frame, n_updates_col):
         return (
             frame.select(
                 F.col("shard").cast("long").alias("shard"),
                 "doc_id",
-                dg.alias("dg"),
                 F.input_file_name().alias("f"),
             )
             .groupBy("shard")
@@ -3311,39 +3077,32 @@ def q315_streaming_export_manifest(spark: SparkSession, sf_dir: str) -> DataFram
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
                 F.min("doc_id").cast("long").alias("min_doc_id"),
                 F.max("doc_id").cast("long").alias("max_doc_id"),
-                F.bit_xor("dg").cast("long").alias("content_xor"),
+                content_xor(F.col("doc_id").cast("string")).alias("content_xor"),
                 F.count_distinct("f").cast("long").alias("n_files"),
             )
             .withColumn("n_updates", n_updates_col)
         )
 
-    try:
-        base = rel.filter(F.col("slot") < 0)
+    with TempStore(spark, "q315_", "shard") as st:
+        feed = st.root + "/delta_feed"
+        _os.makedirs(feed)
+        mdirs = [st.root + f"/manifest_v{v}" for v in range(_Q315_NDELTAS + 1)]
+        mver = 0
 
-        # r14 opt (guide §2.4/§2.6; profiled: setup was 5 full corpus
-        # scans and the base write ran on 2 AQE-coalesced tasks):
-        #  * the base-store write pins an explicit partition count
-        #    (user-specified repartition is not AQE-coalesced) so the
-        #    corpus-mass shuffle write is parallel — one file per
-        #    shard still, each shard lives in exactly one task;
-        #  * the three delta feed writes share ONE narrow checkpoint
-        #    of the ≤ 2·WIDTH delta rows instead of re-scanning the
-        #    corpus per delta;
-        #  * the (base write + manifest v0) chain and the (delta
-        #    checkpoint + feed writes) chain are independent → built
-        #    from a 2-thread pool so their job tails overlap.
+        # the (base write + manifest v0) chain and the (delta
+        # checkpoint + feed writes) chain are independent → overlapped
         def build_base():
-            base.select("doc_id", "text", "shard").repartition(
-                spark.sparkContext.defaultParallelism, "shard"
-            ).write.mode("overwrite").partitionBy("shard").parquet(path)
-            digest(
-                spark.read.parquet(path), F.lit(0).cast("long")
-            ).write.mode("overwrite").parquet(mdirs[0])
+            st.write(rel.filter(F.col("slot") < 0).select("doc_id", "text", "shard"))
+            digest(st.read(), F.lit(0).cast("long")).write.mode("overwrite").parquet(
+                mdirs[0]
+            )
 
         def build_feed():
             # the delta feed, written BY SPARK one file per delta (no
             # driver-side data collect; coalesce(1) → exactly one part
-            # file per append job, replayed one micro-batch each).
+            # file per append job, replayed one micro-batch each). The
+            # feed writes share ONE narrow checkpoint of the ≤ 2·WIDTH
+            # delta rows instead of re-scanning the corpus per delta.
             deltas = (
                 rel.filter(F.col("slot") >= 0)
                 .select("doc_id", "text", "slot")
@@ -3358,11 +3117,7 @@ def q315_streaming_export_manifest(spark: SparkSession, sf_dir: str) -> DataFram
                     .parquet(feed)
                 )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb, ff = pool.submit(build_base), pool.submit(build_feed)
-            fb.result(), ff.result()
+        overlap(build_base, build_feed)
 
         def apply_batch(batch_df, epoch_id):
             nonlocal mver
@@ -3374,19 +3129,13 @@ def q315_streaming_export_manifest(spark: SparkSession, sf_dir: str) -> DataFram
             )
             if not touched:
                 return
-            batch.repartition("shard").write.mode("append").partitionBy(
-                "shard"
-            ).parquet(path)
+            st.append(batch)
             prev = spark.read.parquet(mdirs[mver])
-            # r14 opt: list ONLY the touched shard directories
-            # (basePath keeps the shard partition column) — the
-            # filter form re-listed all |shards| store directories
-            # per micro-batch (profiled: a 79-path listing job every
-            # batch) before pruning.
+            # list ONLY the touched shard directories — the filter
+            # form re-listed all |shards| store directories per
+            # micro-batch before pruning
             refreshed = digest(
-                spark.read.option("basePath", path).parquet(
-                    *[f"{path}/shard={s}" for s in touched]
-                ),
+                st.read([st.part(s) for s in touched]),
                 F.lit(0).cast("long"),  # placeholder, replaced below
             ).drop("n_updates")
             prev_upd = prev.select(
@@ -3411,7 +3160,7 @@ def q315_streaming_export_manifest(spark: SparkSession, sf_dir: str) -> DataFram
             .option("maxFilesPerTrigger", 1)
             .parquet(feed)
             .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", st.root + "/ckpt")
             .trigger(availableNow=True)
             .start()
         )
@@ -3425,10 +3174,8 @@ def q315_streaming_export_manifest(spark: SparkSession, sf_dir: str) -> DataFram
                 F.col("n_updates").cast("long").alias("n_updates"),
             )
             .orderBy("shard")
-            .collect()  # |shards| rows, before temp-dir cleanup
+            .collect()  # |shards| rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out,
         "shard long, n_rows long, min_doc_id long, max_doc_id long, "
@@ -3504,9 +3251,6 @@ _Q316_D2_MAXCELL = 1
 
 def q316_snapshot_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
     from ai_data_pipeline_spark.plans.constants import Q28_CENTROIDS
 
@@ -3521,30 +3265,19 @@ def q316_snapshot_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     d1 = (F.col("gen") == 1) & (F.col("cell") <= _Q316_D1_MAXCELL)
     d2 = (F.col("gen") == 2) & (F.col("cell") <= _Q316_D2_MAXCELL)
 
-    tmp = tempfile.mkdtemp(prefix="q316_")
-    path = tmp + "/store"
-    try:
-        for mode, cond in (
-            ("overwrite", ~d1 & ~d2),
-            ("append", d1),
-            ("append", d2),
-        ):
-            (
-                corpus.filter(cond)
-                .select("vec_id", "embedding", "cell")
-                .repartition("cell")
-                .write.mode(mode)
-                .partitionBy("cell")
-                .parquet(path)
-            )
+    with TempStore(spark, "q316_", "cell") as st:
+        cols = ["vec_id", "embedding", "cell"]
+        st.write(corpus.filter(~d1 & ~d2).select(*cols))
+        st.append(corpus.filter(d1).select(*cols))
+        st.append(corpus.filter(d2).select(*cols))
 
-        def file_cells(files_df):
-            rows = files_df.select(
+        def file_cells():
+            rows = st.read().select(
                 "cell", F.input_file_name().alias("f")
             ).distinct().collect()  # ≤ |cells|·gens — count-gated
             return {(int(r["cell"]), r["f"]) for r in rows}
 
-        v1 = file_cells(spark.read.parquet(path))
+        v1 = file_cells()
         per_cell_files: dict = {}
         for c, f in v1:
             per_cell_files.setdefault(c, set()).add(f)
@@ -3553,17 +3286,10 @@ def q316_snapshot_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         # COW compaction: flagged cells rewritten as NEW files
-        # APPENDED — v1's files untouched (no dynamic overwrite, no
-        # checkpoint needed: nothing this lineage reads is deleted).
-        hot = (
-            spark.read.parquet(path)
-            .filter(F.col("cell").cast("int").isin([int(c) for c in flagged]))
-            .select("vec_id", "embedding", "cell")
-        )
-        hot.repartition("cell").write.mode("append").partitionBy(
-            "cell"
-        ).parquet(path)
-        allf = file_cells(spark.read.parquet(path))
+        # APPENDED — v1's files untouched (no overwrite: nothing this
+        # lineage reads is deleted).
+        st.append(st.read().filter(F.col("cell").isin(flagged)).select(*cols))
+        allf = file_cells()
         new_files = allf - v1  # the compacted files
         # v2 = untouched cells' v1 files ∪ the new compacted files
         v2 = {(c, f) for (c, f) in v1 if c not in flagged} | new_files
@@ -3575,22 +3301,15 @@ def q316_snapshot_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
             _os.remove(f.replace("file://", "").replace("file:", ""))
 
         # post-GC v2-pinned read: content must be fully intact.
-        v2_paths = sorted(f for _c, f in v2)
-        snap = spark.read.option("basePath", path).parquet(*v2_paths)
-        dg = F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10
-        ).cast("long")
         per_cell = {
             int(r["cell"]): r
-            for r in snap.select(
-                F.col("cell").cast("long").alias("cell"), "vec_id", dg.alias("dg")
-            )
+            for r in st.read(sorted(f for _c, f in v2))
             .groupBy("cell")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.bit_xor("dg").cast("long").alias("content_xor"),
+                content_xor(F.col("vec_id").cast("string")).alias("content_xor"),
             )
-            .collect()  # |cells| rows, before temp-dir cleanup
+            .collect()  # |cells| rows
         }
         v2_by_cell: dict = {}
         for c, f in v2:
@@ -3609,8 +3328,6 @@ def q316_snapshot_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for c in sorted(per_cell_files)
         ]
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         out,
         "cell long, n_rows long, content_xor long, files_v1 long, "

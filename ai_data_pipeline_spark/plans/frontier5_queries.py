@@ -30,14 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_table, spread
+from ai_data_pipeline_spark.catalog import load_table as _t, spread
+from ai_data_pipeline_spark.profile import overlap
+from ai_data_pipeline_spark.sources.store import TempStore, content_xor
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _u40(col):
@@ -63,8 +61,7 @@ _SQL_U40 = "(('0x' || substr(md5(CAST({c} AS VARCHAR)), 1, 10))::BIGINT)"
 # update whose re-embedded vector lands in a different cell moves
 # across partitions — the case a naive same-partition rewrite
 # silently corrupts); only those cells are rewritten (dynamic
-# partition overwrite, per-write option), fully-emptied cells'
-# directories dropped explicitly (q293's rule). Ops are derived
+# partition overwrite), fully-emptied cells dropped. Ops are derived
 # deterministically from the corpus (u40 % 19: 5 → update with the
 # NEGATED embedding — negation is float-exact on both engines and
 # moves the vector to a different cell; 7 → delete; 11 → insert a
@@ -87,9 +84,6 @@ _Q317_INS_OFF = 1_000_000
 
 
 def q317_store_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
@@ -99,9 +93,7 @@ def q317_store_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.pmod(_u40(F.col("vec_id")), F.lit(_Q317_MOD))
     base = ivf_assign_np(emb, Q28_CENTROIDS).select("vec_id", "embedding", "cell")
 
-    tmp = tempfile.mkdtemp(prefix="q317_")
-    path = tmp + "/store"
-    try:
+    with TempStore(spark, "q317_", "cell") as st:
         # ---- the CDC batch (production: arrives as a table; here
         # derived from the corpus so the query is self-contained).
         # Negation is exact in float32 on both engines, and the
@@ -129,36 +121,26 @@ def q317_store_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("vec_id", "embedding", "cell").localCheckpoint()
 
         def build_store():
-            base.repartition("cell").write.mode("overwrite").partitionBy(
-                "cell"
-            ).parquet(path)
-            return spark.read.parquet(path).withColumn("_r", r)
+            st.write(base)
+            return st.read().withColumn("_r", r)
 
         # the base-store write and the CDC-batch kernel checkpoint
-        # are independent — overlap them (guide §2.6, r13 idiom)
-        from concurrent.futures import ThreadPoolExecutor
+        # are independent — overlapped
+        store, incoming = overlap(build_store, build_incoming)
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_store = pool.submit(build_store)
-            f_inc = pool.submit(build_incoming)
-            store, incoming = f_store.result(), f_inc.result()
-
-        # one job over the checkpointed batch for both op counts (r13
-        # opt: was two count() jobs)
+        # one job over the checkpointed batch for both op counts
         opc = incoming.agg(
             F.sum((F.col("vec_id") < _Q317_INS_OFF).cast("int")).alias("u"),
             F.sum((F.col("vec_id") >= _Q317_INS_OFF).cast("int")).alias("i"),
         ).collect()[0]
         # SUM over an empty batch is NULL — keep the empty-CDC-batch
-        # case a 0 like the pre-fusion two-count() form
+        # case a 0
         n_upd, n_ins = int(opc["u"] or 0), int(opc["i"] or 0)
 
         # ---- affected partitions: old cells of touched rows ∪ new
         # cells of incoming vectors. Collects bounded by centroid
         # geometry (≤ |Q28_CENTROIDS| values each). ONE store scan
-        # yields both the old-cell set and the delete count (r13 opt:
-        # was two separate scans, each re-evaluating the md5 op
-        # derivation over the whole store).
+        # yields both the old-cell set and the delete count.
         old_rows = (
             store.filter(F.col("_r").isin(_Q317_UPD, _Q317_DEL))
             .groupBy(F.col("cell").cast("int").alias("c"))
@@ -176,51 +158,25 @@ def q317_store_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # ---- the single coordinated rewrite: survivors of affected
         # cells (minus updated/deleted ids) + ALL incoming rows
-        # (their cells are affected by construction). Checkpoint
-        # BEFORE the write: the survivors' lineage reads the files
-        # the commit replaces (the overwrite-lineage rule).
+        # (their cells are affected by construction); a cell the
+        # merge emptied is dropped.
         survivors = store.filter(
             F.col("cell").cast("int").isin(affected)
             & ~F.col("_r").isin(_Q317_UPD, _Q317_DEL)
         ).select("vec_id", "embedding", "cell")
-        rewrite = survivors.unionByName(incoming).localCheckpoint()
-        rewrite.repartition("cell").write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(path)
-        # a cell emptied by the merge (every row updated-away or
-        # deleted, nothing incoming) keeps its old files under
-        # dynamic overwrite — drop it explicitly (q293's rule)
-        present = {
-            int(x["c"])
-            for x in rewrite.select(F.col("cell").cast("int").alias("c"))
-            .distinct()
-            .collect()  # ≤ K cells
-        }
-        for c in affected:
-            if c not in present:
-                shutil.rmtree(f"{path}/cell={c}", ignore_errors=True)
+        st.overwrite(survivors.unionByName(incoming), affected)
 
         # ---- read-back: audit digest + exact cosine top-3
-        store2 = spark.read.parquet(path)
+        store2 = st.read()
         audit = store2.agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.bit_xor(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("vec_id").cast("string"),
-                                F.lit(":"),
-                                F.col("cell").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).cast("long").alias("content_xor"),
+            content_xor(
+                F.concat(
+                    F.col("vec_id").cast("string"),
+                    F.lit(":"),
+                    F.col("cell").cast("string"),
+                )
+            ).alias("content_xor"),
         ).collect()[0]  # 1 row
 
         queries = similarity.queries_df(spark, Q27_QUERY_VECS)
@@ -238,10 +194,8 @@ def q317_store_upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("rk") <= 3)
             .select("qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim")
-            .collect()  # 15 rows, before temp-dir cleanup
+            .collect()  # 15 rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     res = spark.createDataFrame(out, "qid long, rk long, vec_id long, sim double")
     return (
         res.withColumn("n_rows", F.lit(int(audit["n_rows"])).cast("long"))
@@ -378,19 +332,13 @@ _Q318_MAXF = 50
 
 
 def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators import dedup
 
     docs = spread(_t(spark, sf_dir, "documents"))
     is_batch = F.col("source") == "src0"
     hist_docs = docs.filter(~is_batch)
 
-    tmp = tempfile.mkdtemp(prefix="q318_")
-    v1 = tmp + "/labels_v1"
-    v2 = tmp + "/labels_v2"
-    try:
+    with TempStore(spark, "q318_v1_") as v1, TempStore(spark, "q318_v2_") as v2:
         # ---- ONE shingle pass serves BOTH pair universes (r13 opt:
         # the first cut tokenized/hashed/distinct'd the corpus twice —
         # once inside ngram_jaccard_pairs(hist_docs) under the
@@ -453,9 +401,8 @@ def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFra
         )
 
         def build_store():
-            labels0 = dedup.dedup_clusters_star(hist_pairs)
-            labels0.repartition(8).write.mode("overwrite").parquet(v1)
-            return spark.read.parquet(v1)
+            v1.write(dedup.dedup_clusters_star(hist_pairs))
+            return v1.read()
 
         # ---- the batch's NEW pairs: batch-batch + batch-history,
         # under the FULL-corpus cap — a second filter over the same
@@ -503,14 +450,8 @@ def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFra
 
         # the v1 store branch (hist pairs → star → write → read) and
         # the batch-pair checkpoint both hang off the same sh_base
-        # checkpoint and are independent — overlap them (guide §2.6,
-        # the r13 idiom)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_store = pool.submit(build_store)
-            f_new = pool.submit(build_new_pairs)
-            store, new_pairs = f_store.result(), f_new.result()
+        # checkpoint and are independent — overlapped
+        store, new_pairs = overlap(build_store, build_new_pairs)
 
         # ---- touched components: store components with a member
         # incident to a new pair.
@@ -534,42 +475,30 @@ def q318_incremental_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFra
         relabels = dedup.dedup_clusters_star(new_pairs.unionByName(star_edges))
         carried = store.join(touched, "cluster_id", "anti")
         final = carried.unionByName(relabels)
-        final.repartition(8).write.mode("overwrite").parquet(v2)
+        v2.write(final)
 
         # ---- graded read-back: per-source label digests + the
         # touched fraction.
         n_before = store.select("cluster_id").distinct().count()
         n_touched = touched.count()
         out = (
-            spark.read.parquet(v2)
+            v2.read()
             .join(docs.select(F.col("doc_id").alias("id"), "source"), "id")
             .groupBy("source")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_docs"),
                 F.countDistinct("cluster_id").cast("long").alias("n_clusters"),
-                F.bit_xor(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col("id").cast("string"),
-                                    F.lit(":"),
-                                    F.col("cluster_id").cast("string"),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                ).cast("long").alias("label_xor"),
+                content_xor(
+                    F.concat(
+                        F.col("id").cast("string"),
+                        F.lit(":"),
+                        F.col("cluster_id").cast("string"),
+                    )
+                ).alias("label_xor"),
             )
             .orderBy("source")
-            .collect()  # ≤ |sources| rows, before temp-dir cleanup
+            .collect()  # ≤ |sources| rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     res = spark.createDataFrame(
         out, "source string, n_docs long, n_clusters long, label_xor long"
     )
@@ -691,9 +620,9 @@ ORACLE["q318_incremental_cluster_labels"] = _q318_oracle()
 # per-doc score; here n_chars stands in for any computed score —
 # the semantics under test are schema semantics); v1 files are
 # untouched (verified by a real file-set check, not an assert).
-# A v1-PINNED reader (manifest file list + basePath) sees the OLD
-# 3-column schema — the new column simply does not exist for it; a
-# v2 reader (mergeSchema) sees the evolved 4-column schema with
+# A v1-PINNED reader (manifest file list + the v1 columns) sees the
+# OLD 3-column schema — the new column simply does not exist for it;
+# a v2 reader (the store's evolved schema) sees the 4-column schema with
 # NULL-padded history (unionByName-allowMissingColumns semantics at
 # the store level, q75's idiom). The manifest records a SCHEMA HASH
 # computed from the READ-BACK schema (name:type list, sorted) — the
@@ -720,9 +649,6 @@ _Q319_N_SHARDS = 16
 
 
 def q319_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.text import ws_tokens
 
     docs = _t(spark, sf_dir, "documents")
@@ -737,38 +663,32 @@ def q319_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
         is_new.alias("is_new"),
     )
 
-    tmp = tempfile.mkdtemp(prefix="q319_")
-    path = tmp + "/store"
-    try:
+    with TempStore(spark, "q319_", "shard") as st:
+
+        def file_list():
+            return sorted(
+                r["f"]
+                for r in st.read()
+                .select(F.input_file_name().alias("f"))
+                .distinct()
+                .collect()  # ≤ |shards| files per write — count-gated
+            )
+
         # v1: history, 3-column schema (no quality yet)
-        framed.filter(~F.col("is_new")).select(
-            "doc_id", "n_tokens", "shard"
-        ).repartition("shard").write.mode("overwrite").partitionBy(
-            "shard"
-        ).parquet(path)
-        v1_files = sorted(
-            r["f"]
-            for r in spark.read.parquet(path)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()  # ≤ |shards| files — count-gated
+        st.write(
+            framed.filter(~F.col("is_new")).select("doc_id", "n_tokens", "shard")
         )
+        v1_cols = st.read().columns
+        v1_files = file_list()
         # v2 delta: the EVOLVED schema (quality added) — plain
         # append; parquet files are self-describing, so the store
         # now holds two physical schemas side by side.
-        framed.filter(F.col("is_new")).select(
-            "doc_id", "n_tokens", "quality", "shard"
-        ).repartition("shard").write.mode("append").partitionBy(
-            "shard"
-        ).parquet(path)
-        all_files = sorted(
-            r["f"]
-            for r in spark.read.option("mergeSchema", "true")
-            .parquet(path)
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
+        st.append(
+            framed.filter(F.col("is_new")).select(
+                "doc_id", "n_tokens", "quality", "shard"
+            )
         )
+        all_files = file_list()
         # evolution must be metadata-only: every v1 file survives
         # byte-for-byte (same path ⇒ parquet immutability) and the
         # delta only ADDED files — a real check that fails loudly
@@ -784,27 +704,18 @@ def q319_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
             # as a literal — the oracle pins the expected md5
             return ",".join(f"{n}:{t}" for n, t in sorted(df.dtypes))
 
-        # v1-pinned reader: old schema, no quality column at all
-        v1r = spark.read.option("basePath", path).parquet(*v1_files)
+        # v1-pinned reader: the v1 manifest's files under the v1
+        # schema — the quality column does not exist for it
+        v1r = st.read(v1_files).select(*v1_cols)
         v1_row = v1r.agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.bit_xor(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ":",
-                                F.col("doc_id").cast("string"),
-                                F.col("n_tokens").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).cast("long").alias("content_xor"),
+            content_xor(
+                F.concat_ws(
+                    ":",
+                    F.col("doc_id").cast("string"),
+                    F.col("n_tokens").cast("string"),
+                )
+            ).alias("content_xor"),
         ).collect()[0]  # 1 row
         v1_out = (
             1,
@@ -817,10 +728,8 @@ def q319_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
             schema_sig(v1r),
         )
 
-        # v2 reader: merged schema, history null-padded
-        v2r = spark.read.option("mergeSchema", "true").option(
-            "basePath", path
-        ).parquet(path)
+        # v2 reader: the evolved schema, history null-padded
+        v2r = st.read()
         v2_row = v2r.agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             F.sum(F.col("quality").isNull().cast("int")).cast("long").alias("n_null"),
@@ -830,26 +739,14 @@ def q319_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
             F.sum(F.coalesce(F.col("quality"), F.lit(0)))
             .cast("long")
             .alias("sum_quality"),
-            F.bit_xor(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                ":",
-                                F.col("doc_id").cast("string"),
-                                F.col("n_tokens").cast("string"),
-                                F.coalesce(
-                                    F.col("quality").cast("string"), F.lit("-")
-                                ),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).cast("long").alias("content_xor"),
+            content_xor(
+                F.concat_ws(
+                    ":",
+                    F.col("doc_id").cast("string"),
+                    F.col("n_tokens").cast("string"),
+                    F.coalesce(F.col("quality").cast("string"), F.lit("-")),
+                )
+            ).alias("content_xor"),
         ).collect()[0]  # 1 row
         v2_out = (
             2,
@@ -861,8 +758,6 @@ def q319_snapshot_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFram
             int(v2_row["content_xor"]),
             schema_sig(v2r),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     res = spark.createDataFrame(
         [v1_out, v2_out],
         "snapshot long, n_rows long, n_cols long, n_null_quality long, "
@@ -1035,23 +930,9 @@ def q320_bpe_encode_fixed_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("n_words").cast("long").alias("n_words"),
             F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.bit_xor(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("doc_id").cast("string"),
-                                F.lit(":"),
-                                F.col("seq"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).cast("long").alias("seq_xor"),
+            content_xor(
+                F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("seq"))
+            ).alias("seq_xor"),
         )
         # fertility: BPE tokens per whitespace word (the q162
         # baseline) — one IEEE division of two exact BIGINTs
@@ -1153,9 +1034,6 @@ ORACLE["q320_bpe_encode_fixed_vocab"] = _q320_oracle()
 
 
 def q321_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
     from ai_data_pipeline_spark.plans.constants import Q28_CENTROIDS
 
@@ -1163,10 +1041,9 @@ def q321_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.pmod(_u40(F.col("vec_id")), F.lit(_Q317_MOD))
     base = ivf_assign_np(emb, Q28_CENTROIDS).select("vec_id", "embedding", "cell")
 
-    tmp = tempfile.mkdtemp(prefix="q321_")
-    g1 = tmp + "/store/gen=1"
-    g2 = tmp + "/store/gen=2"
-    try:
+    with TempStore(spark, "q321_gen1_", "cell") as g1, TempStore(
+        spark, "q321_gen2_", "cell"
+    ) as g2:
         # ---- q317's CDC ops, COW-applied: rewritten partitions land
         # in generation 2; generation 1 files are never touched.
         neg = emb.select(
@@ -1189,19 +1066,12 @@ def q321_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("vec_id", "embedding", "cell").localCheckpoint()
 
         def build_store():
-            base.repartition("cell").write.mode("overwrite").partitionBy(
-                "cell"
-            ).parquet(g1)
-            return spark.read.parquet(g1).withColumn("_r", r)
+            g1.write(base)
+            return g1.read().withColumn("_r", r)
 
         # gen-1 write and the CDC-batch kernel checkpoint are
-        # independent — overlap them (guide §2.6, r13 idiom)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_store = pool.submit(build_store)
-            f_inc = pool.submit(build_incoming)
-            store, incoming = f_store.result(), f_inc.result()
+        # independent — overlapped
+        store, incoming = overlap(build_store, build_incoming)
         # v1 manifest: (file, cell) read back from the store itself
         v1_rows = (
             store.select(F.input_file_name().alias("f"), F.col("cell").cast("int").alias("c"))
@@ -1210,8 +1080,8 @@ def q321_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         v1_files = {x["f"]: x["c"] for x in v1_rows}
 
-        # only the union is consumed — ONE collect job (r13 opt: was
-        # two), bounded by |centroids|
+        # only the union is consumed — ONE collect job, bounded by
+        # |centroids|
         affected = sorted(
             int(x["c"])
             for x in store.filter(F.col("_r").isin(_Q317_UPD, _Q317_DEL))
@@ -1225,14 +1095,12 @@ def q321_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cell").cast("int").isin(affected)
             & ~F.col("_r").isin(_Q317_UPD, _Q317_DEL)
         ).select("vec_id", "embedding", "cell")
-        # COW: no overwrite of counted/read files — no checkpoint
-        # needed; gen1 is immutable by construction
-        survivors.unionByName(incoming).repartition("cell").write.mode(
-            "overwrite"
-        ).partitionBy("cell").parquet(g2)
+        # COW: gen-1 is immutable by construction — a fresh store,
+        # no overwrite of files this lineage reads
+        g2.write(survivors.unionByName(incoming))
 
         g2_rows = (
-            spark.read.parquet(g2)
+            g2.read()
             .select(F.input_file_name().alias("f"), F.col("cell").cast("int").alias("c"))
             .distinct()
             .collect()
@@ -1244,12 +1112,12 @@ def q321_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         added = sorted(x["f"] for x in g2_rows)
         n_files_v2 = (len(v1_files) - len(removed)) + len(added)
 
-        pre = spark.read.option("basePath", g1).parquet(*removed).select(
+        pre = g1.read(removed).select(
             "vec_id",
             F.col("embedding").alias("pre_emb"),
             F.col("cell").cast("int").alias("pre_cell"),
         )
-        post = spark.read.option("basePath", g2).parquet(*added).select(
+        post = g2.read(added).select(
             "vec_id",
             F.col("embedding").alias("post_emb"),
             F.col("cell").cast("int").alias("post_cell"),
@@ -1275,20 +1143,12 @@ def q321_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
             feed.groupBy("change_type")
             .agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.bit_xor(
-                    F.conv(
-                        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15),
-                        16,
-                        10,
-                    ).cast("long")
-                ).cast("long").alias("id_xor"),
+                content_xor(F.col("vec_id").cast("string")).alias("id_xor"),
                 F.sum("moved").cast("long").alias("n_cell_moves"),
             )
             .orderBy("change_type")
-            .collect()  # ≤ 4 rows, before temp-dir cleanup
+            .collect()  # ≤ 4 rows
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     res = spark.createDataFrame(
         out, "change_type string, n_rows long, id_xor long, n_cell_moves long"
     )
@@ -1412,23 +1272,17 @@ _Q322_CENTROIDS = [
 
 
 def q322_ivf_reindex_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
     from ai_data_pipeline_spark.plans.constants import Q28_CENTROIDS
 
     emb = _t(spark, sf_dir, "embeddings")
     base = ivf_assign_np(emb, Q28_CENTROIDS).select("vec_id", "embedding", "cell")
 
-    tmp = tempfile.mkdtemp(prefix="q322_")
-    g1 = tmp + "/store/gen=1"
-    g2 = tmp + "/store/gen=2"
-    try:
-        base.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(g1)
-        store = spark.read.parquet(g1).select(
+    with TempStore(spark, "q322_gen1_", "cell") as g1, TempStore(
+        spark, "q322_gen2_", "cell"
+    ) as g2:
+        g1.write(base)
+        store = g1.read().select(
             "vec_id", "embedding", F.col("cell").cast("int").alias("old_cell")
         )
         # re-assignment under the retrained geometry, from the
@@ -1448,31 +1302,17 @@ def q322_ivf_reindex_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # COW generation swap: gen-1 untouched, gen-2 is the new
         # layout — one shuffle keyed by the NEW cell
-        assigned.select("vec_id", "embedding", "cell").repartition(
-            "cell"
-        ).write.mode("overwrite").partitionBy("cell").parquet(g2)
-        audit = spark.read.parquet(g2).agg(
+        g2.write(assigned.select("vec_id", "embedding", "cell"))
+        audit = g2.read().agg(
             F.count(F.lit(1)).cast("long").alias("n_total"),
-            F.bit_xor(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.col("vec_id").cast("string"),
-                                F.lit(":"),
-                                F.col("cell").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-            ).cast("long").alias("content_xor"),
+            content_xor(
+                F.concat(
+                    F.col("vec_id").cast("string"),
+                    F.lit(":"),
+                    F.col("cell").cast("string"),
+                )
+            ).alias("content_xor"),
         ).collect()[0]  # 1 row
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     n_total = int(audit["n_total"])
     n_stayed = sum(int(r["n_vecs"]) for r in matrix
                    if int(r["old_cell"]) == int(r["cell"]))
@@ -1552,9 +1392,8 @@ ORACLE["q322_ivf_reindex_migration"] = _q322_oracle()
 # their new embeddings as JSON, surviving the float32→JSON→float32
 # round trip exactly) and replayed with availableNow +
 # maxFilesPerTrigger=1; each batch runs the full q317 merge: old
-# cells of its hits ∪ new cells of its incoming, survivors
-# checkpointed BEFORE the dynamic overwrite (the overwrite-lineage
-# rule), fully-emptied cells dropped. Graded: post-stream cosine
+# cells of its hits ∪ new cells of its incoming rewritten,
+# fully-emptied cells dropped. Graded: post-stream cosine
 # top-3 + the SAME audit schema as q317 — the oracle IS q317's
 # (base-with-ops-applied; the one-shot/streaming equivalence is the
 # graded claim). Scale: per-batch cost is that batch's affected
@@ -1567,9 +1406,6 @@ ORACLE["q322_ivf_reindex_migration"] = _q322_oracle()
 def q323_streaming_cdc_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os as _os
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
     from ai_data_pipeline_spark.operators.vectorized import ivf_assign_np
@@ -1579,16 +1415,11 @@ def q323_streaming_cdc_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = F.pmod(_u40(F.col("vec_id")), F.lit(_Q317_MOD))
     base = ivf_assign_np(emb, Q28_CENTROIDS).select("vec_id", "embedding", "cell")
 
-    tmp = tempfile.mkdtemp(prefix="q323_")
-    path = tmp + "/store"
-    ops_dir = tmp + "/ops"
-    ckpt = tmp + "/ckpt"
-    _os.makedirs(ops_dir)
     rewritten: set[int] = set()
-    try:
-        base.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
+    with TempStore(spark, "q323_", "cell") as st:
+        ops_dir = st.root + "/ops"
+        _os.makedirs(ops_dir)
+        st.write(base)
 
         # the CDC feed (TEST-HARNESS setup, q297's precedent: in
         # production this arrives from outside — a Kafka topic, a
@@ -1627,7 +1458,7 @@ def q323_streaming_cdc_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
         def apply_batch(batch_df, epoch_id):
             if batch_df.isEmpty():
                 return
-            store = spark.read.parquet(path)
+            store = st.read()
             touched_ids = batch_df.filter(F.col("op").isin("U", "D")).select(
                 "vec_id"
             )
@@ -1637,63 +1468,22 @@ def q323_streaming_cdc_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 Q28_CENTROIDS,
             ).select("vec_id", "embedding", "cell").localCheckpoint()
-            # r14 opt (guide §2.4; profiled ~12 jobs/micro-batch):
-            # ONE per-cell stats job yields affected cells (old cells
-            # of touched rows ∪ new cells of incoming), the emptied
-            # set AND what the post-write `present` collect used to
-            # re-derive — survivors per cell ≡ untouched store rows,
-            # so the second collect job per batch is gone. Bounded by
-            # |centroids| rows, as before.
-            stats = (
-                store.select("vec_id", F.col("cell").cast("int").alias("c"))
-                .join(touched_ids.withColumn("t", F.lit(1)), "vec_id", "left")
-                .select(
-                    "c",
-                    F.lit(1).alias("n_total"),
-                    F.coalesce("t", F.lit(0)).alias("n_hit"),
-                    F.lit(0).alias("n_inc"),
-                )
-                .unionByName(
-                    incoming.select(
-                        F.col("cell").cast("int").alias("c"),
-                        F.lit(0).alias("n_total"),
-                        F.lit(0).alias("n_hit"),
-                        F.lit(1).alias("n_inc"),
-                    )
-                )
-                .groupBy("c")
-                .agg(
-                    F.sum("n_total").alias("n_total"),
-                    F.sum("n_hit").alias("n_hit"),
-                    F.sum("n_inc").alias("n_inc"),
-                )
+            # ONE job: old cells of touched rows ∪ new cells of
+            # incoming — bounded by |centroids| rows
+            affected = sorted(
+                int(x["c"])
+                for x in store.join(touched_ids, "vec_id", "semi")
+                .select(F.col("cell").cast("int").alias("c"))
+                .union(incoming.select(F.col("cell").cast("int").alias("c")))
+                .distinct()
                 .collect()
             )
-            affected = sorted(
-                int(r["c"]) for r in stats if r["n_hit"] > 0 or r["n_inc"] > 0
-            )
-            if not affected:
-                return
-            # present ⇔ the cell keeps ≥1 survivor (untouched store
-            # row) or receives ≥1 incoming row
-            emptied = [
-                int(r["c"])
-                for r in stats
-                if (r["n_hit"] > 0 or r["n_inc"] > 0)
-                and (r["n_total"] - r["n_hit"]) == 0
-                and r["n_inc"] == 0
-            ]
             survivors = store.filter(
                 F.col("cell").cast("int").isin(affected)
             ).join(touched_ids, "vec_id", "anti").select(
                 "vec_id", "embedding", "cell"
             )
-            rewrite = survivors.unionByName(incoming).localCheckpoint()
-            rewrite.repartition("cell").write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("cell").parquet(path)
-            for c in emptied:
-                shutil.rmtree(f"{path}/cell={c}", ignore_errors=True)
+            st.overwrite(survivors.unionByName(incoming), affected)
             rewritten.update(affected)
 
         q = (
@@ -1701,36 +1491,26 @@ def q323_streaming_cdc_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .json(ops_dir)
             .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", st.root + "/ckpt")
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
 
-        store2 = spark.read.parquet(path)
+        store2 = st.read()
 
-        # r14 opt (guide §2.6): the content-xor audit and the cosine
-        # top-3 are independent full-store reads — overlap their jobs
+        # the content-xor audit and the cosine top-3 are independent
+        # full-store reads — overlapped
         def run_audit():
             return store2.agg(
                 F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.bit_xor(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col("vec_id").cast("string"),
-                                    F.lit(":"),
-                                    F.col("cell").cast("string"),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                ).cast("long").alias("content_xor"),
+                content_xor(
+                    F.concat(
+                        F.col("vec_id").cast("string"),
+                        F.lit(":"),
+                        F.col("cell").cast("string"),
+                    )
+                ).alias("content_xor"),
             ).collect()[0]  # 1 row
 
         def run_top3():
@@ -1753,16 +1533,10 @@ def q323_streaming_cdc_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(
                     "qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim"
                 )
-                .collect()  # 15 rows, before temp-dir cleanup
+                .collect()  # 15 rows
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fa, ft = pool.submit(run_audit), pool.submit(run_top3)
-            audit, out = fa.result(), ft.result()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        audit, out = overlap(run_audit, run_top3)
     res = spark.createDataFrame(out, "qid long, rk long, vec_id long, sim double")
     return (
         res.withColumn("n_rows", F.lit(int(audit["n_rows"])).cast("long"))
@@ -1804,11 +1578,10 @@ ORACLE["q323_streaming_cdc_upserts"] = _q317_oracle()
 # physical plan. Then selective MATERIALIZATION (q308's OPTIMIZE
 # discipline applied to DVs): only cells whose deleted fraction
 # crosses the integer-cross-multiplied threshold 5·n_del ≥ n_rows
-# (≥ 20%) are rewritten without their DVs (survivors checkpointed
-# BEFORE the dynamic overwrite — the overwrite-lineage rule;
-# fully-emptied cells dropped — q293's rule; the materialized
-# cells' DV directories unlinked — a manifest operation touching no
-# data bytes, q316's class); an in-path check raises if a kept-DV
+# (≥ 20%) are rewritten without their DVs (fully-emptied cells
+# dropped; the materialized cells' DV directories unlinked — a
+# manifest operation touching no data bytes, q316's class); an
+# in-path check raises if a kept-DV
 # or clean cell's physical files changed. Graded: MOR top-3 search
 # ≡ the oracle's base-minus-deletes recompute (the oracle never
 # sees a store), the delete/cell-regime audit, and the MOR digest
@@ -1824,7 +1597,6 @@ _Q324_MOD = 7
 
 def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import tempfile
 
     from ai_data_pipeline_spark.functions.vector import cosine
     from ai_data_pipeline_spark.operators import similarity
@@ -1834,19 +1606,16 @@ def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     base = ivf_assign_np(emb, Q28_CENTROIDS).select("vec_id", "embedding", "cell")
 
-    tmp = tempfile.mkdtemp(prefix="q324_")
-    path = tmp + "/store"
-    dv_path = tmp + "/dv"
-    try:
-        base.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
+    with TempStore(spark, "q324_", "cell") as st, TempStore(
+        spark, "q324_dv_", "cell"
+    ) as dvs:
+        st.write(base)
 
         def file_map():
             # (cell → sorted file list) from the store's own
             # read-back; collect bounded by |cells| ≤ |centroids|
             rows = (
-                spark.read.parquet(path)
+                st.read()
                 .select(F.col("cell").cast("int").alias("c"),
                         F.input_file_name().alias("f"))
                 .distinct()
@@ -1861,7 +1630,7 @@ def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # the store scan projects its own file name at the source
         # (input_file_name is single-source: project BEFORE joins)
-        store = spark.read.parquet(path).select(
+        store = st.read().select(
             "vec_id", "embedding",
             F.col("cell").cast("int").alias("cell"),
             F.input_file_name().alias("f"),
@@ -1872,14 +1641,11 @@ def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # ---- the DV write: ONLY the delete set moves; keyed by the
         # data file each entry masks (the sidecar contract)
-        dv = store.filter(deleted).select("cell", "f", "vec_id")
-        dv.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(dv_path)
+        dvs.write(store.filter(deleted).select("cell", "f", "vec_id"))
         if file_map() != files_v0:
             raise RuntimeError("q324: DV write touched data files (not MOR)")
 
-        dv_r = spark.read.parquet(dv_path).select(
+        dv_r = dvs.read().select(
             F.col("f").alias("dv_f"), F.col("vec_id").alias("dv_id"),
             F.col("cell").cast("int").alias("dv_cell"),
         )
@@ -1905,15 +1671,15 @@ def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_deleted = sum(dels.values())
 
         def mor_read():
-            st = spark.read.parquet(path).select(
+            data = st.read().select(
                 "vec_id", "embedding",
                 F.col("cell").cast("int").alias("cell"),
                 F.input_file_name().alias("f"),
             )
-            sidecar = spark.read.parquet(dv_path).select(
+            sidecar = dvs.read().select(
                 F.col("f").alias("dv_f"), F.col("vec_id").alias("dv_id")
             )
-            return st.join(
+            return data.join(
                 F.broadcast(sidecar),
                 (F.col("f") == F.col("dv_f"))
                 & (F.col("vec_id") == F.col("dv_id")),
@@ -1923,23 +1689,13 @@ def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         def digest(df):
             row = df.agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
-                F.bit_xor(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col("vec_id").cast("string"),
-                                    F.lit(":"),
-                                    F.col("cell").cast("string"),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                ).cast("long").alias("x"),
+                content_xor(
+                    F.concat(
+                        F.col("vec_id").cast("string"),
+                        F.lit(":"),
+                        F.col("cell").cast("string"),
+                    )
+                ).alias("x"),
             ).collect()[0]  # 1 row
             return int(row["n"]), int(row["x"])
 
@@ -1963,29 +1719,21 @@ def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .filter(F.col("rk") <= 3)
             .select("qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim")
-            .collect()  # 15 rows, before temp-dir cleanup
+            .collect()  # 15 rows
         )
 
         # ---- selective materialization: rewrite ONLY threshold-
-        # flagged cells without their DV rows; checkpoint BEFORE
-        # the dynamic overwrite replaces the files this frame reads
-        if flagged:
-            rewrite = live.filter(F.col("cell").isin(flagged)).select(
+        # flagged cells without their DV rows
+        st.overwrite(
+            live.filter(F.col("cell").isin(flagged)).select(
                 "vec_id", "embedding", "cell"
-            ).localCheckpoint()
-            rewrite.repartition("cell").write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("cell").parquet(path)
-            present = {
-                int(r_["cell"])
-                for r_ in rewrite.select("cell").distinct().collect()
-            }
-            for c in flagged:
-                if c not in present:  # fully-emptied cell (q293)
-                    shutil.rmtree(f"{path}/cell={c}", ignore_errors=True)
-                # the cell's DV is now materialized: unlink the
-                # sidecar partition (manifest op, no data bytes)
-                shutil.rmtree(f"{dv_path}/cell={c}", ignore_errors=True)
+            ),
+            flagged,
+        )
+        for c in flagged:
+            # the cell's DV is now materialized: unlink the sidecar
+            # partition (manifest op, no data bytes)
+            shutil.rmtree(dvs.part(c), ignore_errors=True)
         files_v1 = file_map()
         for c in kept_dv + clean:
             if files_v1.get(c) != files_v0.get(c):
@@ -2001,8 +1749,6 @@ def q324_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ---- post-materialization MOR read: deferred and eager
         # deletes must converge on the same content
         n_live2, xor_after = digest(mor_read())
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     res = spark.createDataFrame(out, "qid long, rk long, vec_id long, sim double")
     return (
         res.withColumn("n_live", F.lit(n_live).cast("long"))
@@ -2131,9 +1877,6 @@ _Q325_HI_PCT = 55
 
 
 def q325_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     b = docs.agg(
         F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
@@ -2145,25 +1888,22 @@ def q325_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = mn0 + (_Q325_LO_PCT * (mx0 - mn0)) // 100
     hi = mn0 + (_Q325_HI_PCT * (mx0 - mn0)) // 100
 
-    tmp = tempfile.mkdtemp(prefix="q325_")
-    path = tmp + "/store"
-    try:
-        framed = docs.withColumn(
-            "bucket",
-            F.expr(
-                f"((doc_id - {mn0}) * {_Q325_FANOUT}) div {span}"
-            ).cast("int"),
+    with TempStore(spark, "q325_", "bucket") as st:
+        st.write(
+            docs.withColumn(
+                "bucket",
+                F.expr(
+                    f"((doc_id - {mn0}) * {_Q325_FANOUT}) div {span}"
+                ).cast("int"),
+            )
         )
-        framed.repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(path)
-
-        store = spark.read.parquet(path).select(
-            "doc_id", "source", "n_chars", F.input_file_name().alias("f")
+        manifest = (
+            st.read()
+            .select("doc_id", F.input_file_name().alias("f"))
+            .groupBy("f")
+            .agg(F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx"))
+            .collect()  # ≤ fan-out rows — the zone map
         )
-        manifest = store.groupBy("f").agg(
-            F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
-        ).collect()  # ≤ fan-out rows — the zone map
         n_files_total = len(manifest)
         selected = sorted(
             m["f"] for m in manifest if int(m["mx"]) >= lo and int(m["mn"]) <= hi
@@ -2173,34 +1913,21 @@ def q325_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             row = df.filter(F.col("doc_id").between(lo, hi)).agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum(F.col("n_chars").cast("long")).cast("long").alias("s"),
-                F.bit_xor(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    ":",
-                                    F.col("doc_id").cast("string"),
-                                    F.col("source"),
-                                    F.col("n_chars").cast("string"),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                ).cast("long").alias("x"),
+                content_xor(
+                    F.concat_ws(
+                        ":",
+                        F.col("doc_id").cast("string"),
+                        F.col("source"),
+                        F.col("n_chars").cast("string"),
+                    )
+                ).alias("x"),
             ).collect()[0]  # 1 row
             return int(row["n"]), int(row["s"]), int(row["x"])
 
-        pruned = spark.read.option("basePath", path).parquet(*selected)
-        n_p, s_p, x_p = band_agg(pruned)
-        n_f, s_f, x_f = band_agg(spark.read.parquet(path))
+        n_p, s_p, x_p = band_agg(st.read(selected))
+        n_f, s_f, x_f = band_agg(st.read())
         if s_p != s_f:
             raise RuntimeError("q325: pruned band sum diverged from full scan")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         [
             (

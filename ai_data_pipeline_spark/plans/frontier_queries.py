@@ -26,14 +26,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_table, spread
+from ai_data_pipeline_spark.catalog import load_table as _t, spread
+from ai_data_pipeline_spark.sources.store import TempStore
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -3889,15 +3886,11 @@ ORACLE["q249_opq_allocation"] = _q249_oracle()
 # (PartitionFilters on the read-back scan). Scale: the store write
 # is one shuffle by cell; the read scans nprobe/K of the data by
 # construction — the IVF payoff as an I/O property, not a compute
-# one. Post-agg collect is 15 rows before temp-dir cleanup (the
-# q215/q217 audited pattern).
+# one. Store lifecycle rules: sources/store.py.
 # ---------------------------------------------------------------------------
 
 
 def q250_ivf_partitioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ai_data_pipeline_spark.functions.vector import (
         cosine,
         quantize_q6,
@@ -3939,17 +3932,9 @@ def q250_ivf_partitioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_rows = probes.select("qid", "seed_id").collect()  # ≤ 2·|queries| rows
     probed_cells = sorted({int(r["seed_id"]) for r in probe_rows})
 
-    tmp = tempfile.mkdtemp(prefix="q250_")
-    path = tmp + "/vectors_by_cell"
-    try:
-        # repartition ON the partition column first: without it every
-        # shuffle partition writes a sliver into every cell directory
-        # (tasks × cells tiny files — probed 6.2× at 16× data); with
-        # it each cell gets one file and the write is one shuffle
-        corpus.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
-        store = spark.read.parquet(path)
+    with TempStore(spark, "q250_", "cell") as st:
+        st.write(corpus)
+        store = st.read()
         cand = (
             store.filter(F.col("cell").cast("long").isin(probed_cells))
             .join(
@@ -3972,10 +3957,8 @@ def q250_ivf_partitioned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rk") <= 3)
             .select("qid", F.col("rk").cast("long").alias("rk"), "vec_id", "sim")
             .orderBy("qid", "rk")
-            .collect()  # 15 rows before temp-dir cleanup
+            .collect()
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.createDataFrame(
         top, "qid long, rk long, vec_id long, sim double"
     ).orderBy("qid", "rk")

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ai_data_pipeline_spark.catalog import (
     load_events,
-    load_table,
+    load_table as _t,
     normalize_event_time,
     spread,
 )
@@ -64,10 +64,6 @@ from ai_data_pipeline_spark.plans.constants import (
     Q27_QUERY_VECS,
     Q28_CENTROIDS,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
 
 
 def _drain_memory_sink(df: DataFrame, name: str) -> DataFrame:
@@ -2554,7 +2550,6 @@ _Q152_SEP_REC = "\x1e"
 
 
 def q152_e2e_pdf_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ai_data_pipeline_spark.operators.chunker import chunk_paged_documents
     from ai_data_pipeline_spark.operators.json_fallback import validate_qa
     from ai_data_pipeline_spark.operators.llm_map import StubLLM, llm_map
     from ai_data_pipeline_spark.sources.fixtures import materialize_pdf_corpus

@@ -69,11 +69,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ai_data_pipeline_spark.catalog import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from ai_data_pipeline_spark.catalog import load_table as _t
 
 
 def money4(col) -> Column:

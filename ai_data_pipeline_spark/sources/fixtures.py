@@ -119,6 +119,23 @@ def materialize_partitioned_orders(spark, sf_dir: str, root: str | None = None) 
     return final
 
 
+def _batch_files(d: str) -> list[str]:
+    return sorted(os.path.join(d, p) for p in os.listdir(d) if p.startswith("batch_"))
+
+
+def _stamp_batches(d: str, now: int) -> None:
+    """Batch k gets mtime ``now + 10·k`` s: the replay order."""
+    for i, path in enumerate(_batch_files(d)):
+        os.utime(path, (now + 10 * i, now + 10 * i))
+
+
+def _replay_ordered(d: str) -> bool:
+    """Batch mtimes strictly increase at ms resolution (the file
+    source's clock), so oldest-first is the batch order."""
+    ms = [os.stat(p).st_mtime_ns // 1_000_000 for p in _batch_files(d)]
+    return all(a < b for a, b in zip(ms, ms[1:]))
+
+
 def materialize_event_stream(sf_dir: str, n_files: int = 3, root: str | None = None) -> str:
     """Split ``events`` into ``n_files`` contiguous ts-ordered parquet
     files under a content-keyed directory, with strictly increasing
@@ -155,7 +172,12 @@ def materialize_event_stream(sf_dir: str, n_files: int = 3, root: str | None = N
     sig = h.hexdigest()[:16]
     root = root or _FIXTURE_ROOT
     final = os.path.join(root, f"event_stream_{sig}")
+    now = int(os.path.getmtime(src))
     if os.path.exists(os.path.join(final, "_SUCCESS")):
+        # a copy that collapsed the mtimes (cp -r) silently reorders
+        # the replay: the marker alone does not vouch for the order
+        if not _replay_ordered(final):
+            _stamp_batches(final, now)
         return final
     os.makedirs(root, exist_ok=True)
     tmp = tempfile.mkdtemp(dir=root, prefix=f".event_stream_{sig}.")
@@ -171,11 +193,10 @@ def materialize_event_stream(sf_dir: str, n_files: int = 3, root: str | None = N
         table = table.replace_schema_metadata(None)
         n = table.num_rows
         bounds = [round(i * n / n_files) for i in range(n_files + 1)]
-        now = int(os.path.getmtime(src))
         for i in range(n_files):
             path = os.path.join(tmp, f"batch_{i:03d}.parquet")
             pq.write_table(table.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
-            os.utime(path, (now + 10 * i, now + 10 * i))
+        _stamp_batches(tmp, now)
         with open(os.path.join(tmp, "_SUCCESS"), "w") as f:
             f.write(sig)
         os.replace(tmp, final)

@@ -532,3 +532,23 @@ def test_zorder_key_matches_python_interleave(spark):
 
     for a, b in pairs:
         assert got[(a, b)] == ref(a, b), (a, b)
+
+
+def test_event_stream_cache_restores_collapsed_replay_order(tmp_path):
+    """A copy that squashes the batch mtimes (cp -r) must not survive
+    a cache hit: replay reads oldest-first, so the cached batches must
+    get their build order back."""
+    import os
+
+    from ai_data_pipeline_spark.sources import fixtures
+    from tests.conftest import SF_SMOKE
+
+    d = fixtures.materialize_event_stream(SF_SMOKE, n_files=3, root=str(tmp_path))
+    batches = fixtures._batch_files(d)
+    built = [os.stat(p).st_mtime_ns for p in batches]
+    assert len(batches) == 3 and fixtures._replay_ordered(d)
+    for p in batches:
+        os.utime(p, ns=(built[0], built[0]))
+    assert not fixtures._replay_ordered(d)
+    assert fixtures.materialize_event_stream(SF_SMOKE, n_files=3, root=str(tmp_path)) == d
+    assert [os.stat(p).st_mtime_ns for p in batches] == built
